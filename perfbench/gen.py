@@ -45,18 +45,18 @@ def trading_day(day: int) -> datetime:
         d += timedelta(days=1)
 
 
-def _final_candles(rng: np.random.Generator, n_sym: int, day_start: int):
-    """(n_sym, SLOTS) arrays of the closed candles: a random walk per
+def _final_candles(rng: np.random.Generator, n_sym: int, day_start: int, slots: int):
+    """(n_sym, slots) arrays of the closed candles: a random walk per
     symbol with OHLC invariants holding by construction."""
     base = rng.uniform(50.0, 3000.0, size=(n_sym, 1))
-    steps = rng.normal(0.0, 0.002, size=(n_sym, SLOTS_PER_DAY))
+    steps = rng.normal(0.0, 0.002, size=(n_sym, slots))
     close = np.round(base * np.exp(np.cumsum(steps, axis=1)), 2)
     open_ = np.round(np.concatenate([base, close[:, :-1]], axis=1), 2)
     wick = np.round(np.abs(rng.normal(0.0, 0.001, size=close.shape)) * close, 2)
     high = np.maximum(open_, close) + wick
     low = np.maximum(np.minimum(open_, close) - wick, 0.01)
     vol = rng.integers(100, 50_000, size=close.shape)
-    ts = day_start + SESSION_OPEN_UTC + 300 * np.arange(SLOTS_PER_DAY)
+    ts = day_start + SESSION_OPEN_UTC + 300 * np.arange(slots)
     return ts, np.round(open_, 2), np.round(high, 2), np.round(low, 2), close, vol
 
 
@@ -66,9 +66,16 @@ def write_bronze_day(
     day: int,
     n_symbols: int,
     n_fetches: int,
+    slots: int = SLOTS_PER_DAY,
+    overlap: int | None = None,
 ) -> tuple[dict, int, list[str]]:
     """Write the ``n_fetches`` polls of one trading day as envelope files
     in ``out_dir``.
+
+    The day has ``slots`` 5-minute candles per symbol. A poll re-sends the
+    day from the open up to its poll time. With ``overlap``, it sends only
+    the candles since the symbol's previous poll, plus the last ``overlap``
+    candles that poll carried, so the forming candle is still revised.
 
     Returns (expected, raw_candles, paths): ``expected`` maps (symbol,
     timestamp_unix) to the last-wins candle tuple (open, high, low, close,
@@ -80,14 +87,12 @@ def write_bronze_day(
     syms = symbols(n_symbols)
     d0 = trading_day(day)
     day_start = int(d0.timestamp())
-    ts, o, h, lo, c, v = _final_candles(rng, n_symbols, day_start)
+    ts, o, h, lo, c, v = _final_candles(rng, n_symbols, day_start, slots)
     # poll k sees slots [0, ends[k]); the last poll sees the whole day
-    ends = [
-        max(1, (SLOTS_PER_DAY * (k + 1)) // n_fetches) for k in range(n_fetches)
-    ]
+    ends = [max(1, (slots * (k + 1)) // n_fetches) for k in range(n_fetches)]
     partial_frac = rng.uniform(0.2, 0.9, size=(n_fetches, n_symbols))
     partial_close = np.round(
-        lo[:, None, :] + rng.uniform(0, 1, size=(n_symbols, n_fetches, SLOTS_PER_DAY))
+        lo[:, None, :] + rng.uniform(0, 1, size=(n_symbols, n_fetches, slots))
         * (h - lo)[:, None, :],
         2,
     )
@@ -96,6 +101,7 @@ def write_bronze_day(
     expected: dict = {}
     raw = 0
     paths = []
+    sent = [0] * n_symbols  # per symbol: end of the last poll it received
     for k in range(n_fetches):
         end = ends[k]
         poll = datetime.fromtimestamp(
@@ -107,8 +113,10 @@ def write_bronze_day(
             if missed[k, i]:
                 continue
             rows = []
-            for s in range(end):
-                forming = s == end - 1 and end < SLOTS_PER_DAY
+            start = 0 if overlap is None else max(0, sent[i] - overlap)
+            sent[i] = end
+            for s in range(start, end):
+                forming = s == end - 1 and end < slots
                 close = float(partial_close[i, k, s]) if forming else float(c[i, s])
                 vol = int(v[i, s] * partial_frac[k, i]) if forming else int(v[i, s])
                 cand = (float(o[i, s]), float(h[i, s]), float(lo[i, s]), close, vol)

@@ -35,7 +35,7 @@ import traceback
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 SETUP_REPS = 3
-MIN_OPS = 4  # at least this many ops per stretch, whatever --seconds says
+MIN_OPS = 4  # at least this many timed ops, whatever --seconds says
 
 
 def log(msg: str) -> None:
@@ -97,16 +97,6 @@ def _stop_jvm() -> None:
             proc.wait()
 
 
-def _op_and_check(wl, i, tracer) -> bool:
-    """One untimed op and its check; False on a wrong result or an error."""
-    try:
-        wl.op(i, tracer)
-        return wl.check(i)
-    except Exception:  # noqa: BLE001 - a failed op is counted, the run goes on
-        log(f"warm-up op {i} failed:\n{traceback.format_exc()}")
-        return False
-
-
 def _median(xs):
     return statistics.median(xs) if xs else 0.0
 
@@ -149,21 +139,23 @@ def run(args) -> dict:
         log(f"setup reps {[round(s, 3) for s in setup]} s, at {time.perf_counter() - t_run:.1f} s")
 
         tracer = tracing.Tracer(spark, enabled=False)
-        attempted = failed = 0
-        for i in range(wl.warmup_ops):  # untimed, but checked
-            attempted += 1
-            failed += not _op_and_check(wl, i, tracer)
-        log(f"{wl.warmup_ops} warm-up ops done at {time.perf_counter() - t_run:.1f} s")
-        plain_ms, traced_ms = [], []
+        warm = wl.warm_up(tracer, log)  # untimed, but checked
+        attempted, failed = len(warm), warm.count(False)
+        log(f"{len(warm)} warm-up ops done at {time.perf_counter() - t_run:.1f} s")
+        # op kind -> untraced and traced op walls (ms); traced ones without
+        # their probe spans
+        plain_ms: dict[str, list[float]] = {}
+        traced_ms: dict[str, list[float]] = {}
         samples: dict[str, list[float]] = {}  # op kind -> latencies
         plain_items = 0
         op_time = 0.0
-        # traced runs alternate untraced and traced stretches of whole
-        # request cycles, so both see the same mix
-        first = wl.warmup_ops
-        min_ops = first + max(MIN_OPS, 2 * wl.period if args.trace else 0)
+        # the timed region is at least two whole cycles of the op mix, so
+        # every run weighs the kinds alike; traced runs alternate untraced
+        # and traced cycles, so both see the same mix
+        first = len(warm)
+        min_ops = first + max(MIN_OPS, 2 * wl.period)
         i = first
-        while op_time < args.seconds or i < min_ops:
+        while op_time < args.seconds or i < min_ops or (i - first) % wl.period:
             traced = bool(args.trace) and ((i - first) // wl.period) % 2 == 1
             tracer.enabled = traced
             first_span = len(tracer.spans)
@@ -186,10 +178,10 @@ def run(args) -> dict:
                     s["dur"] for s in tracer.spans[first_span:] if s["probe"]
                     and (s["parent"] is None or not tracer.spans[s["parent"]]["probe"])
                 )
-                traced_ms.append(1000 * (dt - probe))
+                traced_ms.setdefault(wl.kind(i), []).append(1000 * (dt - probe))
                 op_time -= probe
             else:
-                plain_ms.append(1000 * dt)
+                plain_ms.setdefault(wl.kind(i), []).append(1000 * dt)
                 plain_items += n
                 samples.setdefault(wl.kind(i), []).extend(wl.samples_ms or [1000 * dt])
             try:
@@ -203,16 +195,16 @@ def run(args) -> dict:
             if traced:
                 tracer.collect_counters()
             i += 1
-        plain_s = sum(plain_ms) / 1000.0
+        plain_s = sum(map(sum, plain_ms.values())) / 1000.0
         e2e = {
             "setup_s": (_median(setup), "s"),
             "op_median_ms": (_mix_median(samples), "ms"),
             "items_per_s": (plain_items / plain_s if plain_s else 0.0, "1/s"),
         }
-        log(f"{wl.name}: {len(plain_ms)} untraced ops, {len(traced_ms)} traced, "
-            f"{failed} failed; items = {wl.item}")
-        log(f"untraced op ms {[round(x) for x in plain_ms]}; timed region ended at "
-            f"{time.perf_counter() - t_run:.1f} s")
+        log(f"{wl.name}: {sum(map(len, plain_ms.values()))} untraced ops, "
+            f"{sum(map(len, traced_ms.values()))} traced, {failed} failed; items = {wl.item}")
+        log(f"untraced op ms { {k: [round(x) for x in v] for k, v in plain_ms.items()} }; "
+            f"timed region ended at {time.perf_counter() - t_run:.1f} s")
         if args.trace:
             metrics = _layer_metrics(tracer, plain_ms, traced_ms)
             summary = {
@@ -250,7 +242,8 @@ def run(args) -> dict:
 
 
 def _layer_metrics(tracer, plain_ms, traced_ms) -> dict:
-    """Per-op medians and means over the traced ops; probe spans left out."""
+    """Per-op medians and means over the traced ops; probe spans left out.
+    ``plain_ms`` and ``traced_ms`` map each op kind to its op walls."""
     import tracing
 
     ops: dict[str, list[dict]] = {}
@@ -272,17 +265,17 @@ def _layer_metrics(tracer, plain_ms, traced_ms) -> dict:
         for k in sums:
             sums[k] += sum(s.get(k, 0) for s in spans)
     n = max(len(ops), 1)
-    units = {"executor_run_ms": "ms", "jvm_gc_ms": "ms", "jobs": "count",
-             "stages": "count", "tasks": "count"}
     out = {
         "driver.self_ms": (_median(driver_ms), "ms"),
         "spark.job_ms": (_median(job_ms), "ms"),
     }
     for k, v in sums.items():
-        out[f"spark.{k}"] = (v / n, units.get(k, "bytes"))
-    base = _median(plain_ms)
+        out[k] = (v / n, tracing.COUNTERS[k])
+    # both sides weighted by op kind alike, so the figure does not hinge on
+    # which kind either median lands in
+    base = _mix_median(plain_ms)
     out["trace.overhead_pct"] = (
-        100.0 * (_median(traced_ms) - base) / base if base else 0.0, "%"
+        100.0 * (_mix_median(traced_ms) - base) / base if base else 0.0, "%"
     )
     return out
 

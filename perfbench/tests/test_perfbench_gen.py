@@ -7,6 +7,8 @@ import json
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import gen  # noqa: E402
@@ -34,10 +36,11 @@ def test_bronze_other_seed_other_bytes(tmp_path):
     assert all(da[k] != db[k] for k in da)
 
 
-def test_bronze_expected_is_last_wins(tmp_path):
+@pytest.mark.parametrize("slots, overlap", [(gen.SLOTS_PER_DAY, None), (30, 1)])
+def test_bronze_expected_is_last_wins(tmp_path, slots, overlap):
     """The expected set holds, per (symbol, ts), the candle of the newest
     file carrying it, and the files really overlap and revise."""
-    expected, raw, paths = gen.write_bronze_day(str(tmp_path), 3, 1, 20, 4)
+    expected, raw, paths = gen.write_bronze_day(str(tmp_path), 3, 1, 20, 4, slots, overlap)
     seen: dict = {}
     revised = 0
     for path in paths:
@@ -51,6 +54,7 @@ def test_bronze_expected_is_last_wins(tmp_path):
                 seen[key] = cand
     assert seen == expected
     assert raw > len(expected) and revised > 0
+    assert len({ts for _, ts in expected}) == slots
     for o, h, lo, c, v, _ in expected.values():
         assert h >= max(o, c) and lo <= min(o, c) and c > 0 and v >= 0
 

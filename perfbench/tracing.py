@@ -7,6 +7,10 @@ writes them out once at exit. Each span runs its Spark jobs under its own
 job group (``setJobGroup``), so the status store attributes every job,
 stage and task to exactly one span. A disabled tracer records nothing
 and sets no job group, which is how the untraced ops of a run execute.
+
+The Python worker figures (``python.*``) are SQL metrics, not task
+metrics: they are read from the SQL status store and attributed to a span
+through the jobs of each SQL execution.
 """
 
 from __future__ import annotations
@@ -18,10 +22,24 @@ from contextlib import contextmanager
 
 from py4j.protocol import Py4JError
 
-COUNTERS = (
-    "jobs", "stages", "tasks", "shuffle_read_bytes", "shuffle_write_bytes",
-    "spill_bytes", "executor_run_ms", "jvm_gc_ms",
-)
+#: Counter attributed to each span -> unit.
+COUNTERS = {
+    "spark.jobs": "count", "spark.stages": "count", "spark.tasks": "count",
+    "spark.shuffle_read_bytes": "bytes", "spark.shuffle_write_bytes": "bytes",
+    "spark.spill_bytes": "bytes", "spark.executor_run_ms": "ms", "spark.jvm_gc_ms": "ms",
+    "python.total_ms": "ms", "python.boot_ms": "ms",
+    "python.bytes_sent": "bytes", "python.bytes_received": "bytes",
+}
+
+#: SQL metric name (Spark 4.1 Python exec nodes) -> counter.
+PYTHON_SQL_METRICS = {
+    "time to run Python workers": "python.total_ms",
+    "time to start Python workers": "python.boot_ms",
+    "data sent to Python workers": "python.bytes_sent",
+    "data returned from Python workers": "python.bytes_received",
+}
+_SIZE = {"B": 1, "KiB": 2**10, "MiB": 2**20, "GiB": 2**30, "TiB": 2**40}
+_MS = {"ms": 1, "s": 1000, "m": 60_000, "h": 3_600_000}
 
 
 class Tracer:
@@ -30,6 +48,8 @@ class Tracer:
         self.enabled = enabled
         self.spans: list[dict] = []
         self._stack: list[dict] = []
+        self._sql_next = 0  # id of the first SQL execution not read yet
+        self._python_by_job: dict[int, dict] = {}
 
     @contextmanager
     def span(self, name: str, op: str | None = None, probe: bool = False,
@@ -74,13 +94,49 @@ class Tracer:
     def collect_counters(self) -> None:
         """Attach Spark counters and job intervals to every span that has
         none yet. Call between ops, outside any timed region."""
+        self._read_sql_executions()
         for rec in self.spans:
-            if "jobs" not in rec and "dur" in rec:
+            if "spark.jobs" not in rec and "dur" in rec:
                 if rec["group"]:
                     ids = self.spark.sparkContext.statusTracker().getJobIdsForGroup(rec["group"])
                 else:
                     ids = jobs_in_window(self.spark, rec["start"], rec["end"])
                 rec.update(job_counters(self.spark, ids))
+                done = set()
+                for jid in ids:
+                    ex = self._python_by_job.get(jid)
+                    if ex is not None and id(ex) not in done:
+                        done.add(id(ex))
+                        for k, v in ex.items():
+                            rec[k] += v
+
+    def _read_sql_executions(self) -> None:
+        """Python worker metrics of the SQL executions that ended since the
+        last call, indexed by each of their job ids."""
+        conv = self.spark.sparkContext._jvm.scala.jdk.javaapi.CollectionConverters
+        store = self.spark._jsparkSession.sharedState().statusStore()
+        total = store.executionsCount()
+        if not total:
+            return
+        last = conv.asJava(store.executionsList(total - 1, 1))[0].executionId()
+        first, self._sql_next = self._sql_next, last + 1
+        for eid in range(first, last + 1):
+            found = store.execution(eid)
+            if not found.isDefined():
+                continue  # evicted
+            ex = found.get()
+            wanted = {  # a plan may list an accumulator twice: keyed by its id
+                m.accumulatorId(): PYTHON_SQL_METRICS[m.name()]
+                for m in conv.asJava(ex.metrics()) if m.name() in PYTHON_SQL_METRICS
+            }
+            if not wanted:
+                continue
+            values = conv.asJava(store.executionMetrics(ex.executionId()))
+            figures = dict.fromkeys(PYTHON_SQL_METRICS.values(), 0.0)
+            for acc, name in wanted.items():
+                figures[name] += parse_sql_metric(values.get(acc))
+            for jid in conv.asJava(ex.jobs()).keySet():
+                self._python_by_job[int(jid)] = figures
 
     def dump(self, path: str, summary: dict) -> None:
         os.makedirs(os.path.dirname(path), exist_ok=True)
@@ -112,7 +168,7 @@ def job_counters(spark, job_ids) -> dict:
     out = dict.fromkeys(COUNTERS, 0)
     out["job_intervals"] = []
     for jid in job_ids:
-        out["jobs"] += 1
+        out["spark.jobs"] += 1
         try:
             jd = store.job(jid)
             sub, comp = jd.submissionTime(), jd.completionTime()
@@ -130,14 +186,26 @@ def job_counters(spark, job_ids) -> dict:
                 continue  # evicted, or skipped and never attempted
             if str(sd.status().toString()) == "SKIPPED":
                 continue
-            out["stages"] += 1
-            out["tasks"] += sd.numCompleteTasks()
-            out["shuffle_read_bytes"] += sd.shuffleReadBytes()
-            out["shuffle_write_bytes"] += sd.shuffleWriteBytes()
-            out["spill_bytes"] += sd.memoryBytesSpilled() + sd.diskBytesSpilled()
-            out["executor_run_ms"] += sd.executorRunTime()
-            out["jvm_gc_ms"] += sd.jvmGcTime()
+            out["spark.stages"] += 1
+            out["spark.tasks"] += sd.numCompleteTasks()
+            out["spark.shuffle_read_bytes"] += sd.shuffleReadBytes()
+            out["spark.shuffle_write_bytes"] += sd.shuffleWriteBytes()
+            out["spark.spill_bytes"] += sd.memoryBytesSpilled() + sd.diskBytesSpilled()
+            out["spark.executor_run_ms"] += sd.executorRunTime()
+            out["spark.jvm_gc_ms"] += sd.jvmGcTime()
     return out
+
+
+def parse_sql_metric(text) -> float:
+    """Total of a formatted SQL size or timing metric, in bytes or ms.
+
+    The status store formats a metric as ``"total (min, med, max ...)\n
+    16.9 KiB (4.0 KiB, ...)"``, or as the bare total; None if it was never
+    set."""
+    if not text:
+        return 0.0
+    num, unit = text.strip().splitlines()[-1].split()[:2]
+    return float(num.replace(",", "")) * {**_SIZE, **_MS}[unit]
 
 
 def covered_seconds(intervals: list[tuple[float, float]], lo: float, hi: float) -> float:

@@ -11,10 +11,12 @@ from __future__ import annotations
 
 import calendar
 import datetime as dt
+import functools
 import os
 import random
 import shutil
 import time
+import traceback
 
 import gen
 import tracing
@@ -62,11 +64,30 @@ def _dir_stats(path: str) -> tuple[int, int]:
     return files, size
 
 
+def checked_concurrently(calls, threads: int, log) -> list[bool]:
+    """Run ``(label, call)`` pairs on ``threads`` threads. Each call
+    returns whether its output checked out; one that raises counts as a
+    failed check."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    def one(item):
+        label, call = item
+        try:
+            return call()
+        except Exception:  # noqa: BLE001 - a failed op is counted, the run goes on
+            log(f"warm-up {label} failed:\n{traceback.format_exc()}")
+            return False
+
+    with ThreadPoolExecutor(threads) as pool:
+        return list(pool.map(one, calls))
+
+
 class Workload:
     name = ""
     item = "items"
     period = 1  # ops per cycle of the workload's op mix
     warmup_ops = 0  # untimed ops between set-up and the timed region
+    warm_threads = 1  # the warm-up's ops may run concurrently
     sizes: dict[str, dict] = {}
 
     def __init__(self, work: str, seed: int, size: str):
@@ -97,6 +118,19 @@ class Workload:
     def check(self, i: int) -> bool:
         return True
 
+    def warm_up(self, tracer, log) -> list[bool]:
+        """Run and check the untimed ops between set-up and the timed
+        region; one result per op, False on a wrong result or an error."""
+
+        def one(i):
+            self.op(i, tracer)
+            return self.check(i)
+
+        return checked_concurrently(
+            [(f"op {i}", functools.partial(one, i)) for i in range(self.warmup_ops)],
+            self.warm_threads, log,
+        )
+
     def record(self, name: str, value: float) -> None:
         """A workload-specific layer figure of one traced op."""
         self.layers.setdefault(name, []).append(value)
@@ -113,10 +147,13 @@ class Workload:
 class EtlDayBatch(Workload):
     name = "etl_daybatch"
     item = "raw candles"
-    warmup_ops = 3
+    warmup_ops = 6
+    warm_threads = 2  # batches write to directories of their own
     sizes = {
-        "full": {"symbols": 100, "fetches": 4, "days": 3, "warm_symbols": 20},
-        "tiny": {"symbols": 6, "fetches": 3, "days": 2, "warm_symbols": 3},
+        "full": {"symbols": 100, "fetches": 20, "slots": 30, "overlap": 1, "days": 3,
+                 "warm_symbols": 10},
+        "tiny": {"symbols": 6, "fetches": 3, "slots": 30, "overlap": 1, "days": 2,
+                 "warm_symbols": 3},
     }
 
     def generate(self):
@@ -124,12 +161,14 @@ class EtlDayBatch(Workload):
         self.days = []
         for d in range(p["days"]):
             exp, raw, _ = gen.write_bronze_day(
-                f"{self.work}/bronze/d{d}", self.seed, d, p["symbols"], p["fetches"]
+                f"{self.work}/bronze/d{d}", self.seed, d, p["symbols"], p["fetches"],
+                p["slots"], p["overlap"],
             )
             want = fingerprint(gen.SILVER_CHECK_COLUMNS, gen.expected_rows(exp))
             self.days.append((f"{self.work}/bronze/d{d}", raw, want))
         gen.write_bronze_day(
-            f"{self.work}/bronze/warm", self.seed, 40, p["warm_symbols"], p["fetches"]
+            f"{self.work}/bronze/warm", self.seed, 40, p["warm_symbols"], p["fetches"],
+            p["slots"], p["overlap"],
         )
         self.outs: dict[int, str] = {}
 
@@ -206,6 +245,7 @@ API_CYCLE = (
     "date_range", "latest", "point_resample", "top_movers", "point_5m",
 )
 API_SCANS = {"daily_summary", "top_movers", "latest"}
+API_KINDS = tuple(dict.fromkeys(API_CYCLE))
 
 _ROLLUP_SQL = """
     arg_min(open, timestamp_unix) AS open, max(high) AS high, min(low) AS low,
@@ -219,7 +259,7 @@ class CandleApi(Workload):
     name = "candle_api"
     item = "requests"
     period = len(API_CYCLE)
-    warmup_ops = 2 * len(API_CYCLE)
+    WARM_CYCLES = 2
     sizes = {
         "full": {"symbols": 100, "days": 2, "fetches": 4},
         "tiny": {"symbols": 6, "days": 2, "fetches": 2},
@@ -229,7 +269,7 @@ class CandleApi(Workload):
         p = self.p
         for d in range(p["days"]):
             gen.write_bronze_day(
-                f"{self.work}/bronze", self.seed, d, p["symbols"], p["fetches"]
+                f"{self.work}/bronze", self.seed, d, p["symbols"], p["fetches"], overlap=1
             )
         self.symbols = [s[4:-3] for s in gen.symbols(p["symbols"])]
         self.dates = [gen.trading_day(d).date().isoformat() for d in range(p["days"])]
@@ -264,8 +304,7 @@ class CandleApi(Workload):
     def prepare(self, spark):
         super().prepare(spark)
         self.silver = spark.read.parquet(self.silver_path)
-        for kind in ("point_5m", "daily_summary"):  # a first point and scan request
-            self._call(kind, self._params(kind, random.Random(0)))
+        self._call("point_5m", self._params("point_5m", random.Random(0)))  # a first request
 
     def _params(self, kind, rng):
         sym = rng.choices(self.ranked, self.weights)[0]
@@ -303,6 +342,27 @@ class CandleApi(Workload):
                 out = [(df.columns, df.collect()) for df in dfs]
         self.record("plans.analytics.build_ms", 1000 * sb["dur"])
         return out
+
+    def warm_up(self, tracer, log):
+        """Every request kind on every date (the first request on a date ran
+        3-4x slower than later ones), then WARM_CYCLES passes over the
+        cycle, each request checked. Requests still sped up over the first
+        ~20 s of a run, so the warm-up runs on three threads to get there
+        in less wall time."""
+        reqs = []
+        for day in self.dates:
+            for kind in API_KINDS:
+                a = self._params(kind, self.rng)
+                a.update({"date": day, "from": day, "to": max(day, a["to"])})
+                reqs.append((kind, a))
+        reqs += [(k, self._params(k, self.rng)) for k in API_CYCLE * self.WARM_CYCLES]
+
+        def one(kind, a):
+            return self._matches_duckdb(kind, a, self._call(kind, a))
+
+        return checked_concurrently(
+            [(f"request {k}", functools.partial(one, k, a)) for k, a in reqs], 3, log
+        )
 
     def kind(self, i):
         return API_CYCLE[i % len(API_CYCLE)]
@@ -362,12 +422,14 @@ class CandleApi(Workload):
         ]
 
     def check(self, i):
-        kind, a, frames = self.last
+        return self._matches_duckdb(*self.last)
+
+    def _matches_duckdb(self, kind, a, frames):
         duck = self._duck(kind, a)
         if len(duck) != len(frames):
             return False
         for (cols, rows), sql in zip(frames, duck):
-            cur = self.duck.execute(sql)
+            cur = self.duck.cursor().execute(sql)  # a cursor per call: thread-safe
             dcols = [d[0] for d in cur.description]
             drows = cur.fetchall()
             keep = [c for c in cols if c in dcols]
@@ -480,40 +542,52 @@ class StreamIngest(Workload):
 # registry_mix — a fixed slice of the query registry, seeded order
 # ---------------------------------------------------------------------------
 
+#: One query per layer family: the fastest of the family's queries on the
+#: generated tables, so that a run holds several passes over the slice.
 REGISTRY_SLICE = {
-    "fold": ("x_forecast_backtest", "x_squeeze", "x_supertrend", "x_bollinger_bands"),
-    "rank": ("d_quality_fusion", "d_rrf_fusion", "e_rfm_segments"),
-    "similarity": ("emb_pq_ann", "emb_ivf_ann"),
-    "dedup_similarity": ("d_minhash_neardup", "d_simhash_pairs"),
-    "sql": ("q01_pricing_summary", "q16_supplier_variety", "q21_sole_blockers",
-            "e_daily_rollup", "e_resample_15m"),
+    "fold": "x_bollinger_bands",  # grouped_fold through applyInPandas: the Python/Arrow boundary
+    "rank": "e_rfm_segments",  # quantile segments over operators.rank's running sum
+    "similarity": "emb_ivf_ann",
+    "dedup_similarity": "d_minhash_neardup",
+    "sql": "q01_pricing_summary",  # Catalyst only
 }
-FAMILY = {q: fam for fam, qs in REGISTRY_SLICE.items() for q in qs}
+FAMILY = {q: fam for fam, q in REGISTRY_SLICE.items()}
 
 
 class RegistryMix(Workload):
+    """The slice's queries in a seeded order, pass after pass, each forced
+    with a noop sink."""
+
     name = "registry_mix"
     item = "queries"
     period = len(FAMILY)
-    sizes = {"full": {"scale": 0.2}, "tiny": {"scale": 0.02}}
+    sizes = {"full": {"scale": 0.02}, "tiny": {"scale": 0.01}}
 
     def generate(self):
         self.tables = f"{self.work}/tables"
         gen.write_tables(self.tables, self.seed, self.p["scale"])
         os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = self.tables
         self.order: list[str] = []
-        self.checked: set[str] = set()
 
     def prepare(self, spark):
         super().prepare(spark)
         import __spark_entry__ as entry
 
         self.queries = entry.queries()
-        for q in FAMILY:
-            self._run(q)
 
-    def _run(self, q):
-        self.queries[q](self.spark, self.tables).write.format("noop").mode("overwrite").save()
+    def warm_up(self, tracer, log):
+        """The untimed first pass: each query of the slice on a thread of
+        its own, so their cold starts overlap. Each is collected and checked
+        against its ``oracle_sql()`` twin, once per run: the timed passes
+        run the same queries on the same tables."""
+
+        def one(q):
+            df = self.queries[q](self.spark, self.tables)
+            return self._matches_oracle(q, df.columns, df.collect())
+
+        return checked_concurrently(
+            [(f"query {q}", functools.partial(one, q)) for q in FAMILY], len(FAMILY), log
+        )
 
     def op(self, i, tracer):
         if not self.order:
@@ -530,19 +604,17 @@ class RegistryMix(Workload):
         self.record(f"registry.{FAMILY[q]}_s", time.perf_counter() - t0)
         return 1
 
+    def _run(self, q):
+        self.queries[q](self.spark, self.tables).write.format("noop").mode("overwrite").save()
+
     def kind(self, i):
         return self.last  # the query op ``i`` ran; the order is drawn in op()
 
-    def check(self, i):
-        q = self.last
-        if q in self.checked:
-            return True
-        self.checked.add(q)
+    def _matches_oracle(self, q, cols, got_rows):
         import duckdb
         import __spark_entry__ as entry
 
-        sdf = self.queries[q](self.spark, self.tables)
-        got = fingerprint(sdf.columns, sdf.collect())
+        got = fingerprint(cols, got_rows)
         con = duckdb.connect()
         try:
             for t in gen.TABLE_NAMES:
