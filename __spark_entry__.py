@@ -1828,12 +1828,12 @@ ORDER BY symbol_clean, timestamp_unix, event_id
 def x_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped-map pandas extension point (SS2.9) WITH an exact oracle:
     Bollinger bands (rolling mean +/- 2 sample stddev, 20-row window) per
-    user series via applyInPandas. The pandas side uses exact integer
+    user series via grouped_fold. The pandas side uses exact integer
     micro-unit sums (bollinger_bands_exact), so it replays bit-identically
     as windowed decimal SQL."""
     from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.operators.extension import (
-        apply_per_symbol,
         bollinger_bands_exact,
+        grouped_fold,
     )
 
     ev = _t(spark, sf_dir, "events")
@@ -1843,18 +1843,14 @@ def x_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros(F.col("ts")).alias("timestamp_unix"),
         F.col("value").alias("close"),
     )
-    # explicit hash partitioning on the group key: AQE would coalesce the
-    # small shuffle to ~2 partitions and serialize the 150 pandas groups
-    src = src.repartition(spark.sparkContext.defaultParallelism, "user_id")
-    out = apply_per_symbol(
+    return grouped_fold(
         src,
+        ["user_id"],
         bollinger_bands_exact(window=20, num_std=2.0),
         "user_id bigint, event_id bigint, timestamp_unix bigint, close double,"
         " bb_mid double, bb_upper double, bb_lower double",
-        keys=("user_id",),
-        ts_col=("timestamp_unix", "event_id"),
+        order=["timestamp_unix", "event_id"],
     )
-    return out
 
 
 _X_BOLLINGER_SQL = """
@@ -1893,8 +1889,8 @@ def x_ema_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
     group key, Arrow both ways; group size is one instrument's history,
     so 100 TB parallelism scales with instrument count."""
     from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.operators.extension import (
-        apply_per_symbol,
         ema_macd_exact,
+        grouped_fold,
     )
 
     ev = _t(spark, sf_dir, "events")
@@ -1904,17 +1900,14 @@ def x_ema_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros(F.col("ts")).alias("timestamp_unix"),
         F.col("value").alias("close"),
     )
-    # explicit hash partitioning on the group key (see x_bollinger_bands)
-    src = src.repartition(spark.sparkContext.defaultParallelism, "user_id")
-    out = apply_per_symbol(
+    return grouped_fold(
         src,
+        ["user_id"],
         ema_macd_exact(fast=12, slow=26),
         "user_id bigint, event_id bigint, timestamp_unix bigint, close double,"
         " ema_fast double, ema_slow double, macd double",
-        keys=("user_id",),
-        ts_col=("timestamp_unix", "event_id"),
+        order=["timestamp_unix", "event_id"],
     )
-    return out
 
 
 _X_EMA_MACD_SQL = """
@@ -10596,8 +10589,8 @@ def x_ppo(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the fold's exact states. Positive-price rows only (the
     daily_returns DQ rule) so the denominator is never zero."""
     from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.operators.extension import (
-        apply_per_symbol,
         ema_macd_exact,
+        grouped_fold,
     )
 
     ev = _t(spark, sf_dir, "events").filter(F.col("value") > 0)
@@ -10607,14 +10600,13 @@ def x_ppo(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros(F.col("ts")).alias("timestamp_unix"),
         F.col("value").alias("close"),
     )
-    src = src.repartition(spark.sparkContext.defaultParallelism, "user_id")
-    out = apply_per_symbol(
+    out = grouped_fold(
         src,
+        ["user_id"],
         ema_macd_exact(fast=12, slow=26),
         "user_id bigint, event_id bigint, timestamp_unix bigint, close double,"
         " ema_fast double, ema_slow double, macd double",
-        keys=("user_id",),
-        ts_col=("timestamp_unix", "event_id"),
+        order=["timestamp_unix", "event_id"],
     )
     return out.select(
         "user_id",

@@ -13,6 +13,8 @@ repartitions, so checksums/regression baselines stay stable.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -119,6 +121,21 @@ def u6(col, alias: str | None = None) -> Column:
 def sql_u6(expr: str) -> str:
     """DuckDB/ANSI twin of :func:`u6` for oracle queries."""
     return f"CAST(floor(({expr}) * 1e6 + 0.5) AS BIGINT)"
+
+
+def pd_u6(s: pd.Series) -> np.ndarray:
+    """pandas twin of :func:`u6` for the recurrence folds: the same IEEE
+    ops in the same order, as an int64 array."""
+    return np.floor(s.to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
+
+
+def sdiv(num: int, den: int = 1_000_000) -> int:
+    """Integer division truncating toward zero (unlike Python's flooring
+    ``//``): how the exact folds rescale a micro-unit product back to
+    micro-units."""
+    if num >= 0:
+        return num // den
+    return -((-num) // den)
 
 
 def sql_dsum(expr: str) -> str:

@@ -38,4 +38,4 @@ from .similarity import (  # noqa: F401
     ivf_knn,
     embedding_near_dup_pairs,
 )
-from .extension import apply_per_symbol  # noqa: F401
+from .extension import grouped_fold  # noqa: F401

@@ -14,8 +14,12 @@ from __future__ import annotations
 
 from collections.abc import Callable, Sequence
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from ..functions.exact import pd_u6
 
 
 def grouped_fold(
@@ -23,31 +27,47 @@ def grouped_fold(
     keys: Sequence[str],
     fold: Callable[[pd.DataFrame], pd.DataFrame],
     schema: str,
-    num_partitions: int | None = None,
+    order: Sequence[str],
 ) -> DataFrame:
     """Run a per-group pandas ``fold`` via ``mapInPandas`` over
-    key-contiguous partitions — the amortized replacement for
-    ``groupBy(keys).applyInPandas(fold)`` (guide §4: fewer, larger Arrow
-    crossings; the JVM↔Python boundary is paid per partition batch, not
-    per group).
+    key-contiguous partitions — the package's one per-key fold, and the
+    amortized replacement for ``groupBy(keys).applyInPandas(fold)``
+    (guide §4: fewer, larger Arrow crossings; the JVM↔Python boundary is
+    paid per partition batch, not per group).
 
-    Same exchange as the grouped-map form (hash on ``keys``), plus a
-    partition-local sort on ``keys`` so each group's rows are contiguous;
-    ``fold`` receives one whole group at a time with a fresh RangeIndex —
-    byte-identical input to what ``applyInPandas`` delivers (within-group
-    row order is unspecified in both forms; every in-repo fold sorts by
-    its order column first). Groups that span Arrow batch boundaries are
-    carried over, so the 10k-row default batch size never splits a group.
+    This function alone decides how a fold's input is partitioned and
+    ordered:
+
+    - hash partitioning on ``keys`` into ``defaultParallelism``
+      partitions. The explicit count matters: AQE would byte-coalesce a
+      small shuffle to ONE partition and serialize every group's Arrow
+      round-trip into a single task (measured 7.4 s -> sub-second for
+      150 groups at bench scale);
+    - a partition-local sort on ``keys``, then ``order`` ascending with
+      NULLS LAST (pandas ``sort_values``' ``na_position="last"``).
+
+    So ``fold`` receives one whole group at a time, in ``order``, with a
+    fresh RangeIndex. Contract: ``(keys, order)`` is unique — rows tied
+    on it reach ``fold`` in shuffle order. Groups that span Arrow batch
+    boundaries are carried over, so the 10k-row default batch size never
+    splits a group.
 
     ``fold`` may return any shape matching ``schema`` (fewer/more rows,
-    different columns). Keys must be scalar, comparable values (NULL keys
-    are grouped together, as in grouped-map).
+    different columns; see :func:`fold_schema`). Keys must be scalar,
+    comparable values. NULL keys form one group, as in grouped-map. A
+    float key's NaN and NULL are ONE key: Arrow hands a NULL double to
+    pandas as NaN (and writes a NaN key back as NULL), so both are
+    partitioned and sorted as NULL and reach ``fold`` as one group.
     """
-    import numpy as np
-
     key_list = list(keys)
-    n = num_partitions or src.sparkSession.sparkContext.defaultParallelism
-    part = src.repartition(n, *key_list).sortWithinPartitions(*key_list)
+    floats = {k for k, t in src.dtypes if t in ("double", "float")}
+    part_keys = [
+        F.nanvl(k, F.lit(None)) if k in floats else F.col(k) for k in key_list
+    ]
+    n = src.sparkSession.sparkContext.defaultParallelism
+    part = src.repartition(n, *part_keys).sortWithinPartitions(
+        *part_keys, *(F.col(c).asc_nulls_last() for c in order)
+    )
 
     def _assemble(frames):
         out = frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
@@ -102,30 +122,27 @@ def grouped_fold(
     return part.mapInPandas(run, schema=schema)
 
 
-def apply_per_symbol(
-    df: DataFrame,
-    fn: Callable[[pd.DataFrame], pd.DataFrame],
-    output_schema: str,
-    keys: Sequence[str] = ("symbol_clean",),
-    ts_col: str | Sequence[str] | None = "timestamp_iso",
-) -> DataFrame:
-    """Run ``fn`` once per key group as a pandas DataFrame (sorted by
-    ``ts_col`` when given — indicator code can assume chronological
-    order). ``output_schema`` is the full output schema DDL string.
+def fold_schema(src: DataFrame, extra: str) -> str:
+    """DDL schema of a fold that returns every column of ``src`` followed
+    by the columns in ``extra`` (a DDL fragment such as
+    ``"ema double, macd double"``)."""
+    return ", ".join(f"{k} {t}" for k, t in src.dtypes) + ", " + extra
 
-    Scale: groups are single instruments; even a decade of 5-minute
-    candles per symbol is ~750k rows — comfortably one Arrow batch. Skewed
-    universes (one instrument dominating) are bounded by per-group size,
-    not executor count.
-    """
 
-    def wrapped(pdf: pd.DataFrame) -> pd.DataFrame:
-        if ts_col is not None:
-            order = [ts_col] if isinstance(ts_col, str) else list(ts_col)
-            pdf = pdf.sort_values(list(keys) + order)
-        return fn(pdf)
-
-    return grouped_fold(df, keys, wrapped, output_schema)
+def masked(
+    values: np.ndarray, null: np.ndarray | None = None
+) -> pd.api.extensions.ExtensionArray:
+    """``values`` as a pandas masked array that Arrow writes as NULL (not
+    NaN) where ``null`` is set — NaN positions when ``null`` is omitted —
+    so a fold's warm-up rows hash like the SQL twin's NULLs. Float values
+    give Float64, integer values keep their width (cast to ``int32``
+    first for an ``int`` schema column). The direct constructor is ~6x
+    cheaper than ``pd.array`` + NA assignment at 2M-row groups."""
+    if null is None:
+        null = np.isnan(values)
+    if values.dtype.kind == "f":
+        return pd.arrays.FloatingArray(values, null)
+    return pd.arrays.IntegerArray(values, null)
 
 
 def bollinger_bands(
@@ -168,10 +185,8 @@ def ema_macd_exact(
     convention; a SMA warm-up seed would fold the same way)."""
     import math
 
-    import numpy as np
-
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        v = np.floor(pdf[price_col].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
+        v = pd_u6(pdf[price_col])
         e_fast = np.empty(len(v), dtype=np.int64)
         e_slow = np.empty(len(v), dtype=np.int64)
         ef = es = 0
@@ -207,7 +222,6 @@ def bollinger_bands_exact(
     (~9e9 in price units — far above any real OHLCV window). n < 2 emits
     sd = 0 like :func:`bollinger_bands`. Oracle-checked in
     __spark_entry__ as x_bollinger_bands."""
-    import numpy as np
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         x = pdf[price_col].to_numpy(dtype=float)

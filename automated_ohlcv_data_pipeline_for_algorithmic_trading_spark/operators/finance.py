@@ -30,8 +30,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.exact import q6, u6
-from .extension import grouped_fold
+from ..functions.exact import pd_u6, q6, sdiv, u6
+from .extension import fold_schema, grouped_fold, masked
 
 __all__ = [
     "max_drawdown",
@@ -959,23 +959,15 @@ def heikin_ashi(
     key_list = list(keys)
     in_cols = [*key_list, order_col, open_col, high, low, close]
     src = df.select(*in_cols)
-    # explicit hash partitioning on the group key: AQE coalesces the
-    # small pre-grouped-map shuffle to ONE partition by bytes, which
-    # serializes every group's Arrow round-trip into a single task
-    # (measured 7.4 s -> sub-second for 150 groups at bench scale)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    schema = src.schema.simpleString()[7:-1].replace(":", " ") + (
-        ", ha_open double, ha_high double, ha_low double, ha_close double"
+    schema = fold_schema(
+        src, "ha_open double, ha_high double, ha_low double, ha_close double"
     )
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
-        o = np.floor(pdf[open_col].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
-        h = np.floor(pdf[high].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
-        lo = np.floor(pdf[low].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
-        c = np.floor(pdf[close].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
+        o = pd_u6(pdf[open_col])
+        h = pd_u6(pdf[high])
+        lo = pd_u6(pdf[low])
+        c = pd_u6(pdf[close])
         ha_c = (o + h + lo + c) // 4
         # plain-list recurrence (numpy scalar indexing is ~5x slower in
         # sequential folds — see the hot-key smoke in SCALE_RESULTS.md)
@@ -995,7 +987,7 @@ def heikin_ashi(
             ha_close=ha_c / 1e6,
         )
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order=[order_col])
 
 
 def supertrend(
@@ -1025,8 +1017,7 @@ def supertrend(
     BIGINT state), so the per-group pandas loop and a DuckDB recursive
     CTE with the same CASE logic compute identical states — the third
     recurrence family with an exact oracle after EMA and Heikin-Ashi.
-    Grouped-map per key with explicit repartitioning (the
-    one-task-AQE-coalesce fix all grouped-map operators here carry).
+    One grouped_fold per key.
 
     Output: keys + order_col + h/l/c + (atr, st_upper, st_lower, trend,
     supertrend); rows before the ATR seed window emit NULL indicator
@@ -1037,19 +1028,16 @@ def supertrend(
 
     key_list = list(keys)
     src = df.select(*key_list, order_col, high, low, close)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    schema = src.schema.simpleString()[7:-1].replace(":", " ") + (
-        ", atr double, st_upper double, st_lower double,"
-        " trend int, supertrend double"
+    schema = fold_schema(
+        src,
+        "atr double, st_upper double, st_lower double, trend int,"
+        " supertrend double",
     )
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
-        h = np.floor(pdf[high].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
-        lo = np.floor(pdf[low].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
-        c = np.floor(pdf[close].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
+        h = pd_u6(pdf[high])
+        lo = pd_u6(pdf[low])
+        c = pd_u6(pdf[close])
         m = len(h)
         atr = np.full(m, -1, dtype=np.int64)
         fub = np.zeros(m, dtype=np.int64)
@@ -1097,24 +1085,18 @@ def supertrend(
             fub[n - 1:] = ful[n - 1:]
             flb[n - 1:] = fll[n - 1:]
             trend[n - 1:] = tdl[n - 1:]
+        # warm-up rows are NULL (not NaN) like the SQL twin's LEFT JOIN
+        # misses
         valid = atr >= 0
-
-        def masked(x):
-            # direct masked-array constructor: ~6x cheaper than pd.array
-            # + NA assignment at 2M-row groups; warm-up rows are NULL
-            # (not NaN) like the SQL twin's LEFT JOIN misses
-            return pd.arrays.FloatingArray(x / 1e6, ~valid)
-
-        tarr = pd.arrays.IntegerArray(trend.astype(np.int32), ~valid)
         return pdf.assign(
-            atr=masked(atr),
-            st_upper=masked(fub),
-            st_lower=masked(flb),
-            trend=tarr,
-            supertrend=masked(np.where(trend == 1, flb, fub)),
+            atr=masked(atr / 1e6, ~valid),
+            st_upper=masked(fub / 1e6, ~valid),
+            st_lower=masked(flb / 1e6, ~valid),
+            trend=masked(trend.astype(np.int32), ~valid),
+            supertrend=masked(np.where(trend == 1, flb, fub) / 1e6, ~valid),
         )
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order=[order_col])
 
 
 def williams_r(
@@ -1474,8 +1456,7 @@ def adx(
     Flat-market edges: +DI/-DI are NULL while S_tr == 0; DX is 0 while
     S+ + S- == 0 (Wilder's convention). Warm-up bars emit NULL.
 
-    Grouped-map per key with explicit repartitioning (the
-    one-task-AQE-coalesce fix all grouped-map operators here carry).
+    One grouped_fold per key.
 
     Output: keys + order_col + (pdi, mdi, adx).
     """
@@ -1484,18 +1465,12 @@ def adx(
 
     key_list = list(keys)
     src = df.select(*key_list, order_col, high, low, close)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    schema = src.schema.simpleString()[7:-1].replace(":", " ") + (
-        ", pdi double, mdi double, adx double"
-    )
+    schema = fold_schema(src, "pdi double, mdi double, adx double")
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
-        h = np.floor(pdf[high].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
-        lo = np.floor(pdf[low].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
-        c = np.floor(pdf[close].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
+        h = pd_u6(pdf[high])
+        lo = pd_u6(pdf[low])
+        c = pd_u6(pdf[close])
         m = len(h)
         pdi = np.full(m, np.nan)
         mdi = np.full(m, np.nan)
@@ -1540,11 +1515,9 @@ def adx(
                 else:
                     au = (au * (n - 1) + dx) // n
                     adxv[i] = au / 1e4
-        def masked(x):
-            return pd.arrays.FloatingArray(x, np.isnan(x))  # NaN -> NULL
         return pdf.assign(pdi=masked(pdi), mdi=masked(mdi), adx=masked(adxv))
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order=[order_col])
 
 
 def parabolic_sar(
@@ -1583,27 +1556,19 @@ def parabolic_sar(
     same trick supertrend's oracle leans on.
 
     Output: keys + order + h/l/c + (psar, trend, ep, af); bar 1 emits
-    NULL indicator values (warm-up). Grouped-map per key with explicit
-    repartitioning (the one-task-AQE-coalesce fix all grouped-map
-    operators here carry).
+    NULL indicator values (warm-up). One grouped_fold per key.
     """
     import numpy as np
     import pandas as pd
 
     key_list = list(keys)
     src = df.select(*key_list, order_col, high, low, close)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    schema = src.schema.simpleString()[7:-1].replace(":", " ") + (
-        ", psar double, trend int, ep double, af int"
-    )
+    schema = fold_schema(src, "psar double, trend int, ep double, af int")
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
-        h = np.floor(pdf[high].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
-        lo = np.floor(pdf[low].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
-        c = np.floor(pdf[close].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
+        h = pd_u6(pdf[high])
+        lo = pd_u6(pdf[low])
+        c = pd_u6(pdf[close])
         m = len(h)
         sar_a = np.zeros(m, dtype=np.int64)
         ep_a = np.zeros(m, dtype=np.int64)
@@ -1650,18 +1615,14 @@ def parabolic_sar(
             af_a[1:] = al[1:]
             tr_a[1:] = tl[1:]
 
-        def masked_px(x):
-            return pd.arrays.FloatingArray(x / 1e6, ~valid)
-
-        def masked_i(x):
-            return pd.arrays.IntegerArray(x.astype(np.int32), ~valid)
-
         return pdf.assign(
-            psar=masked_px(sar_a), trend=masked_i(tr_a),
-            ep=masked_px(ep_a), af=masked_i(af_a),
+            psar=masked(sar_a / 1e6, ~valid),
+            trend=masked(tr_a.astype(np.int32), ~valid),
+            ep=masked(ep_a / 1e6, ~valid),
+            af=masked(af_a.astype(np.int32), ~valid),
         )
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order=[order_col])
 
 
 def trix(
@@ -1690,19 +1651,10 @@ def trix(
 
     key_list = list(keys)
     src = df.select(*key_list, order_col, close)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    schema = src.schema.simpleString()[7:-1].replace(":", " ") + (
-        ", trix_ema double, trix double"
-    )
+    schema = fold_schema(src, "trix_ema double, trix double")
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        # applyInPandas gives NO within-group row order (upstream agg
-        # output is hash-ordered) — sort chronologically like every
-        # other recurrence fold or the EMA chain folds a shuffled series
-        pdf = pdf.sort_values([*key_list, order_col])
-        v = np.floor(pdf[close].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
+        v = pd_u6(pdf[close])
         m = len(v)
         e3_a = np.empty(m, dtype=np.int64)
         tx = np.full(m, np.nan)
@@ -1718,10 +1670,9 @@ def trix(
                 if p3 != 0:
                     tx[i] = 100.0 * (e3 - p3) / p3
             e3_a[i] = e3
-        txa = pd.arrays.FloatingArray(tx, np.isnan(tx))
-        return pdf.assign(trix_ema=e3_a / 1e6, trix=txa)
+        return pdf.assign(trix_ema=e3_a / 1e6, trix=masked(tx))
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order=[order_col])
 
 
 def cci(
@@ -1886,16 +1837,10 @@ def kama(
     cf6 = 2_000_000 // (fast + 1)
     cs6 = 2_000_000 // (slow + 1)
     src = df.select(*key_list, order_col, close)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    schema = src.schema.simpleString()[7:-1].replace(":", " ") + (
-        ", er double, kama double"
-    )
+    schema = fold_schema(src, "er double, kama double")
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
-        p = np.floor(pdf[close].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
+        p = pd_u6(pdf[close])
         m = len(p)
         er_a = np.full(m, np.nan)
         ka = np.full(m, np.nan)
@@ -1927,12 +1872,9 @@ def kama(
             er_a[n:] = er_v / 1e6
             ka[n:] = np.asarray(ev, dtype=np.float64) / 1e6
 
-        def masked(x):
-            return pd.arrays.FloatingArray(x, np.isnan(x))
-
         return pdf.assign(er=masked(er_a), kama=masked(ka))
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order=[order_col])
 
 
 def vidya(
@@ -1971,16 +1913,10 @@ def vidya(
     key_list = list(keys)
     f6 = 2_000_000 // (s + 1)
     src = df.select(*key_list, order_col, close)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    schema = src.schema.simpleString()[7:-1].replace(":", " ") + (
-        ", cmo double, vidya double"
-    )
+    schema = fold_schema(src, "cmo double, vidya double")
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
-        p = np.floor(pdf[close].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
+        p = pd_u6(pdf[close])
         m = len(p)
         cmo_a = np.full(m, np.nan)
         va = np.full(m, np.nan)
@@ -2012,12 +1948,9 @@ def vidya(
             cmo_a[n:] = cmo6_v / 1e6
             va[n:] = np.asarray(vv, dtype=np.float64) / 1e6
 
-        def masked(x):
-            return pd.arrays.FloatingArray(x, np.isnan(x))
-
         return pdf.assign(cmo=masked(cmo_a), vidya=masked(va))
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order=[order_col])
 
 
 def klinger(
@@ -2063,17 +1996,12 @@ def klinger(
 
     key_list = list(keys)
     src = df.select(*key_list, order_col, high, low, close, volume)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    base_schema = ", ".join(f"{k} {t}" for k, t in src.dtypes)
-    schema = base_schema + ", kvo double, signal double"
+    schema = fold_schema(src, "kvo double, signal double")
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
-        h = np.floor(pdf[high].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
-        l = np.floor(pdf[low].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
-        c = np.floor(pdf[close].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
+        h = pd_u6(pdf[high])
+        l = pd_u6(pdf[low])
+        c = pd_u6(pdf[close])
         vol = pdf[volume].to_numpy(dtype=np.int64)
         m = len(h)
         kvo_a = np.full(m, np.nan)
@@ -2110,12 +2038,9 @@ def klinger(
                 sig_a[i] = e_g / 1e6
                 prev_trend = trend
 
-        def masked(x):
-            return pd.arrays.FloatingArray(x, np.isnan(x))
-
         return pdf.assign(kvo=masked(kvo_a), signal=masked(sig_a))
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order=[order_col])
 
 
 def chande_momentum(
@@ -2392,14 +2317,14 @@ def ema_fold(
     - emit BOTH the BIGINT state (``state_col`` — downstream exact
       integer algebra) and the rescaled double (``out_col``).
 
-    Grouped-map per key, sorted chronologically inside the fold; seeds
-    at the first value. A recursive SQL CTE carrying one BIGINT state
+    One grouped_fold per key in ``order_col`` order; seeds at the first
+    value. A recursive SQL CTE carrying one BIGINT state
     replays it bit-identically.
 
     Parallelism trap (measured, the r4 heikin_ashi lesson's second
     form): if ``df`` is ALREADY hash-partitioned on exactly ``keys``
     (e.g. it came out of a window over the same key), Catalyst removes
-    the explicit repartition below as redundant — and AQE then
+    grouped_fold's explicit repartition as redundant — and AQE then
     byte-coalesces the upstream ENSURE_REQUIREMENTS exchange to one
     partition, serializing every group's fold into a single task
     (8x measured at sf0.1). Callers deriving the input via a same-key
@@ -2412,15 +2337,9 @@ def ema_fold(
     import pandas as pd
 
     key_list = list(keys)
-    src = df.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    schema = src.schema.simpleString()[7:-1].replace(":", " ") + (
-        f", {state_col} bigint, {out_col} double"
-    )
+    schema = fold_schema(df, f"{state_col} bigint, {out_col} double")
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
         v = np.floor(
             pdf[value_col].to_numpy(dtype=float) * scale + 0.5
         ).astype(np.int64)
@@ -2434,7 +2353,7 @@ def ema_fold(
             e_a[i] = e
         return pdf.assign(**{state_col: e_a, out_col: e_a / scale})
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(df, key_list, fold, schema, order=[order_col])
 
 
 def force_index(
@@ -2466,7 +2385,7 @@ def force_index(
         .withColumn("fi_raw", fi_raw)
         .filter(F.col("fi_raw").isNotNull())
         # the lag window partitions on exactly `keys`, which would let
-        # Catalyst drop ema_fold's repartition and AQE serialize every
+        # Catalyst drop grouped_fold's repartition and AQE serialize every
         # fold into one task (ema_fold docstring) — cut the lineage so
         # the fold stage keeps its own parallelism; the materialized
         # table is per-key BARS, tiny relative to the fact input
@@ -2561,19 +2480,11 @@ def volume_index(
     src = df.select(
         *key_list, F.col(order_col), F.col(close), F.col(volume)
     )
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    schema = src.schema.simpleString()[7:-1].replace(":", " ") + (
-        ", nvi double, pvi double"
-    )
+    schema = fold_schema(src, "nvi double, pvi double")
     seed = int(base * 1e6)
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
-        cu = np.floor(
-            pdf[close].to_numpy(dtype=float) * 1e6 + 0.5
-        ).astype(np.int64)
+        cu = pd_u6(pdf[close])
         vol = pdf[volume].to_numpy(dtype=np.int64)
         m = len(cu)
         if m == 0:
@@ -2619,7 +2530,7 @@ def volume_index(
         pvi_a = folded(ok & (vol[1:] > vol[:-1]))
         return pdf.assign(nvi=nvi_a / 1e6, pvi=pvi_a / 1e6)
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order=[order_col])
 
 
 def dema_tema(
@@ -2649,16 +2560,10 @@ def dema_tema(
 
     key_list = list(keys)
     src = df.select(*key_list, order_col, close)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    schema = src.schema.simpleString()[7:-1].replace(":", " ") + (
-        ", dema double, tema double"
-    )
+    schema = fold_schema(src, "dema double, tema double")
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
-        v = np.floor(pdf[close].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
+        v = pd_u6(pdf[close])
         m = len(v)
         dema_a = np.empty(m, dtype=np.int64)
         tema_a = np.empty(m, dtype=np.int64)
@@ -2674,7 +2579,7 @@ def dema_tema(
             tema_a[i] = 3 * e1 - 3 * e2 + e3
         return pdf.assign(dema=dema_a / 1e6, tema=tema_a / 1e6)
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order=[order_col])
 
 
 def t3_ma(
@@ -2710,14 +2615,10 @@ def t3_ma(
 
     key_list = list(keys)
     src = df.select(*key_list, order_col, close)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    schema = src.schema.simpleString()[7:-1].replace(":", " ") + ", t3 double"
+    schema = fold_schema(src, "t3 double")
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
-        v = np.floor(pdf[close].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
+        v = pd_u6(pdf[close])
         m = len(v)
         t3_a = np.empty(m, dtype=np.int64)
         e = [0] * 6
@@ -2732,7 +2633,7 @@ def t3_ma(
             t3_a[i] = -343 * e[5] + 2499 * e[4] - 6069 * e[3] + 4913 * e[2]
         return pdf.assign(t3=t3_a / 1e9)
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order=[order_col])
 
 
 def holt_winters(
@@ -2772,27 +2673,15 @@ def holt_winters(
 
     key_list = list(keys)
     src = df.select(*key_list, order_col, close)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    base_schema = ", ".join(f"{k} {t}" for k, t in src.dtypes)
-    schema = base_schema + (
-        ", level double, trend double, season double, forecast double"
+    schema = fold_schema(
+        src, "level double, trend double, season double, forecast double"
     )
     ca6 = 1_000_000 - alpha6
     cg6 = 1_000_000 - gamma6
     cd6 = 1_000_000 - delta6
 
-    def sdiv(num: int) -> int:
-        if num >= 0:
-            return num // 1_000_000
-        return -((-num) // 1_000_000)
-
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
-        p = np.floor(pdf[close].to_numpy(dtype=float) * 1e6 + 0.5).astype(
-            np.int64
-        )
+        p = pd_u6(pdf[close])
         m = len(p)
         lv = np.empty(m, dtype=np.int64)
         tr = np.empty(m, dtype=np.int64)
@@ -2818,7 +2707,7 @@ def holt_winters(
             level=lv / 1e6, trend=tr / 1e6, season=se / 1e6, forecast=fc / 1e6
         )
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order=[order_col])
 
 
 def holt_winters_multiplicative(
@@ -2876,27 +2765,15 @@ def holt_winters_multiplicative(
 
     key_list = list(keys)
     src = df.select(*key_list, order_col, close)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    base_schema = ", ".join(f"{k} {t}" for k, t in src.dtypes)
-    schema = base_schema + (
-        ", level double, trend double, season double, forecast double"
+    schema = fold_schema(
+        src, "level double, trend double, season double, forecast double"
     )
     ca6 = 1_000_000 - alpha6
     cg6 = 1_000_000 - gamma6
     cd6 = 1_000_000 - delta6
 
-    def sdiv(num: int, den: int = 1_000_000) -> int:
-        if num >= 0:
-            return num // den
-        return -((-num) // den)
-
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
-        p = np.floor(pdf[close].to_numpy(dtype=float) * 1e6 + 0.5).astype(
-            np.int64
-        )
+        p = pd_u6(pdf[close])
         m = len(p)
         lv = np.empty(m, dtype=np.int64)
         tr = np.empty(m, dtype=np.int64)
@@ -2927,7 +2804,7 @@ def holt_winters_multiplicative(
             level=lv / 1e6, trend=tr / 1e6, season=se / 1e6, forecast=fc / 1e6
         )
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order=[order_col])
 
 
 def elder_impulse_states(
@@ -2957,16 +2834,10 @@ def elder_impulse_states(
 
     key_list = list(keys)
     src = df.select(*key_list, order_col, close)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    schema = src.schema.simpleString()[7:-1].replace(":", " ") + (
-        ", ema13 double, macd double, hist double"
-    )
+    schema = fold_schema(src, "ema13 double, macd double, hist double")
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
-        v = np.floor(pdf[close].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
+        v = pd_u6(pdf[close])
         m = len(v)
         ema13_a = np.empty(m, dtype=np.int64)
         macd_a = np.empty(m, dtype=np.int64)
@@ -2988,7 +2859,7 @@ def elder_impulse_states(
             ema13=ema13_a / 1e6, macd=macd_a / 1e6, hist=hist_a / 1e6
         )
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order=[order_col])
 
 
 def mcginley_dynamic(
@@ -3032,16 +2903,10 @@ def mcginley_dynamic(
 
     key_list = list(keys)
     src = df.select(*key_list, order_col, close)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    schema = src.schema.simpleString()[7:-1].replace(":", " ") + (
-        ", mcginley double"
-    )
+    schema = fold_schema(src, "mcginley double")
     kn = k * n
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
         v = pdf[close].to_numpy(dtype=float)
         out = np.empty(len(v), dtype=float)
         md = 0.0
@@ -3057,7 +2922,7 @@ def mcginley_dynamic(
             out[i] = md
         return pdf.assign(mcginley=out)
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order=[order_col])
 
 
 def linreg_slope(
@@ -3199,15 +3064,9 @@ def kalman_1d(
 
     key_list = list(keys)
     src = df.select(*key_list, order_col, close)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    schema = src.schema.simpleString()[7:-1].replace(":", " ") + (
-        ", kf_x double, kf_p double"
-    )
+    schema = fold_schema(src, "kf_x double, kf_p double")
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
         z = pdf[close].to_numpy(dtype=float)
         m = len(z)
         xs = np.empty(m)
@@ -3225,7 +3084,7 @@ def kalman_1d(
             ps[i] = p
         return pdf.assign(kf_x=xs, kf_p=ps)
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order=[order_col])
 
 
 def coppock_curve(
@@ -3493,15 +3352,9 @@ def mass_index(
 
     key_list = list(keys)
     src = df.select(*key_list, order_col, high, low)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    schema = src.schema.simpleString()[7:-1].replace(":", " ") + (
-        ", e1 bigint, e2 bigint"
-    )
+    schema = fold_schema(src, "e1 bigint, e2 bigint")
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
         rng = np.floor(
             (pdf[high].to_numpy(dtype=float) - pdf[low].to_numpy(dtype=float))
             * 1e6
@@ -3521,7 +3374,7 @@ def mass_index(
             e2_a[i] = e2
         return pdf.assign(e1=e1_a, e2=e2_a)
 
-    folded = grouped_fold(src, key_list, fold, schema)
+    folded = grouped_fold(src, key_list, fold, schema, order=[order_col])
     ratio = F.when(
         F.col("e2") > 0,
         F.col("e1").cast("double") / F.col("e2").cast("double"),
@@ -3873,9 +3726,8 @@ def renko_bricks(
     on prices). All quantities stay positive, so `//` floor division
     agrees between Python and DuckDB.
 
-    Fold discipline: repartition by key, sort inside the fold, O(1)
-    integer work per bar (the standard applyInPandas recurrence shape —
-    cf. volume_index/kalman_1d).
+    Fold discipline: one grouped_fold per key, O(1) integer work per bar
+    (the standard recurrence shape — cf. volume_index/kalman_1d).
 
     Output: keys, order_col, close, n_bricks, dir, brick_lo, brick_hi.
     """
@@ -3885,20 +3737,14 @@ def renko_bricks(
     src = df.filter(F.col(close) > 0).select(
         *key_list, F.col(order_col), F.col(close)
     )
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    schema = src.schema.simpleString()[7:-1].replace(":", " ") + (
-        ", n_bricks long, dir long, brick_lo double, brick_hi double"
+    schema = fold_schema(
+        src, "n_bricks long, dir long, brick_lo double, brick_hi double"
     )
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
-        pdf = pdf.sort_values([*key_list, order_col])
-        cu = np.floor(
-            pdf[close].to_numpy(dtype=float) * 1e6 + 0.5
-        ).astype(np.int64)
+        cu = pd_u6(pdf[close])
         m = len(cu)
         nb = np.zeros(m, dtype=np.int64)
         dr = np.zeros(m, dtype=np.int64)
@@ -3928,7 +3774,7 @@ def renko_bricks(
             n_bricks=nb, dir=dr, brick_lo=los / 1e6, brick_hi=his / 1e6
         )
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order=[order_col])
 
 
 def chandelier_exit(
@@ -4054,19 +3900,11 @@ def tsi(
 
     key_list = list(keys)
     src = df.select(*key_list, order_col, close)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    schema = src.schema.simpleString()[7:-1].replace(":", " ") + (
-        ", mtm double, tsi double"
-    )
+    schema = fold_schema(src, "mtm double, tsi double")
     ds, dfst = slow + 1.0, fast + 1.0
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
-        q = np.floor(pdf[close].to_numpy(dtype=float) * 1e6 + 0.5).astype(
-            np.int64
-        )
+        q = pd_u6(pdf[close])
         m = len(q)
         mtm_a = np.full(m, np.nan)
         tsi_a = np.full(m, np.nan)
@@ -4089,7 +3927,7 @@ def tsi(
         out = pdf.assign(mtm=mtm_a, tsi=tsi_a)
         return out[~np.isnan(tsi_a)]
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order=[order_col])
 
 
 def zigzag_pivots(
@@ -4120,26 +3958,18 @@ def zigzag_pivots(
     new leg's extreme starts at the confirming bar, after the previous
     pivot), so (keys, pivot_date) is a total order.
     """
-    import numpy as np
     import pandas as pd
 
     key_list = list(keys)
     src = df.filter(F.col(close) > 0).select(*key_list, order_col, close)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
     date_t = dict(src.dtypes)[order_col]
-    key_t = ", ".join(f"{k} {t}" for k, t in src.dtypes if k in key_list)
-    schema = (
-        key_t
-        + f", pivot_date {date_t}, pivot_price double, pivot_type string"
+    schema = fold_schema(
+        src.select(*key_list),
+        f"pivot_date {date_t}, pivot_price double, pivot_type string",
     )
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
-        q = np.floor(pdf[close].to_numpy(dtype=float) * 1e6 + 0.5).astype(
-            np.int64
-        )
+        q = pd_u6(pdf[close])
         dates = pdf[order_col].to_list()
         kv = [pdf[k].iloc[0] for k in key_list]
         out = []
@@ -4179,7 +4009,7 @@ def zigzag_pivots(
             columns=[*key_list, "pivot_date", "pivot_price", "pivot_type"],
         )
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order=[order_col])
 
 
 def alligator(
@@ -4220,16 +4050,11 @@ def alligator(
 
     key_list = list(keys)
     src = df.select(*key_list, order_col, high, low)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    base_schema = ", ".join(f"{k} {t}" for k, t in src.dtypes)
-    schema = base_schema + ", mid double, jaw double, teeth double, lips double"
+    schema = fold_schema(src, "mid double, jaw double, teeth double, lips double")
     nj, nt, nl = jaw[0], teeth[0], lips[0]
     oj, ot, ol = jaw[1], teeth[1], lips[1]
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
         m = np.floor(
             (pdf[high].to_numpy(dtype=float) + pdf[low].to_numpy(dtype=float))
             * 500000.0
@@ -4258,7 +4083,7 @@ def alligator(
             if off < n:
                 vals[off:] = states[: n - off] / 1e6
             mask[: min(off, n)] = True
-            return pd.arrays.FloatingArray(vals, mask)
+            return masked(vals, mask)
 
         return pdf.assign(
             mid=m / 1e6,
@@ -4267,7 +4092,7 @@ def alligator(
             lips=disp(la, ol),
         )
 
-    out = grouped_fold(src, key_list, fold, schema)
+    out = grouped_fold(src, key_list, fold, schema, order=[order_col])
     return out.select(*key_list, order_col, "mid", "jaw", "teeth", "lips")
 
 
@@ -4317,19 +4142,12 @@ def garch_vol(
 
     key_list = list(keys)
     src = df.select(*key_list, order_col, close)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    base_schema = ", ".join(f"{k} {t}" for k, t in src.dtypes)
-    schema = base_schema + ", ret double, cond_var double, sigma double"
+    schema = fold_schema(src, "ret double, cond_var double, sigma double")
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
         import math
 
-        pdf = pdf.sort_values([*key_list, order_col])
-        p = np.floor(pdf[close].to_numpy(dtype=float) * 1e6 + 0.5).astype(
-            np.int64
-        )
+        p = pd_u6(pdf[close])
         m = len(p)
         ret_a = np.full(m, np.nan)
         var_a = np.full(m, np.nan)
@@ -4360,14 +4178,11 @@ def garch_vol(
                 sig_a[i] = math.floor(math.sqrt(float(v)) + 0.5) / 1e6
                 r_prev = r6
 
-        def masked(x):
-            return pd.arrays.FloatingArray(x, np.isnan(x))
-
         return pdf.assign(
             ret=masked(ret_a), cond_var=masked(var_a), sigma=masked(sig_a)
         )
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order=[order_col])
 
 
 def holt_linear(
@@ -4406,24 +4221,12 @@ def holt_linear(
 
     key_list = list(keys)
     src = df.select(*key_list, order_col, close)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    base_schema = ", ".join(f"{k} {t}" for k, t in src.dtypes)
-    schema = base_schema + ", level double, trend double, forecast double"
+    schema = fold_schema(src, "level double, trend double, forecast double")
     ca6 = 1_000_000 - alpha6
     cg6 = 1_000_000 - gamma6
 
-    def sdiv(num: int) -> int:
-        if num >= 0:
-            return num // 1_000_000
-        return -((-num) // 1_000_000)
-
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
-        p = np.floor(pdf[close].to_numpy(dtype=float) * 1e6 + 0.5).astype(
-            np.int64
-        )
+        p = pd_u6(pdf[close])
         m = len(p)
         lv = np.empty(m, dtype=np.int64)
         tr = np.empty(m, dtype=np.int64)
@@ -4442,7 +4245,7 @@ def holt_linear(
             level=lv / 1e6, trend=tr / 1e6, forecast=(lv + tr) / 1e6
         )
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order=[order_col])
 
 
 def regime_viterbi(
@@ -4487,14 +4290,9 @@ def regime_viterbi(
 
     key_list = list(keys)
     src = df.select(*key_list, order_col, ret_col)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    base_schema = ", ".join(f"{k} {t}" for k, t in src.dtypes)
-    schema = base_schema + ", regime int, margin double"
+    schema = fold_schema(src, "regime int, margin double")
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
         r = pdf[ret_col].to_numpy(dtype=np.int64)
         m = len(r)
         regime = np.empty(m, dtype=np.int32)
@@ -4514,7 +4312,7 @@ def regime_viterbi(
             margin[i] = s_up - s_dn
         return pdf.assign(regime=regime, margin=margin / 1e6)
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order=[order_col])
 
 
 def regime_conditional_holt(
@@ -4573,30 +4371,15 @@ def regime_conditional_holt(
 
     key_list = list(keys)
     src = df.select(*key_list, order_col, close, ret_col)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    base_schema = ", ".join(f"{k} {t}" for k, t in src.dtypes)
-    schema = (
-        base_schema + ", regime int, level double, trend double,"
-        " forecast double"
-    )
+    schema = fold_schema(src, "regime int, level double, trend double, forecast double")
     ca_up6 = 1_000_000 - alpha_up6
     cg_up6 = 1_000_000 - gamma_up6
     ca_dn6 = 1_000_000 - alpha_dn6
     cg_dn6 = 1_000_000 - gamma_dn6
 
-    def sdiv(num: int) -> int:
-        if num >= 0:
-            return num // 1_000_000
-        return -((-num) // 1_000_000)
-
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
         r = pdf[ret_col].to_numpy(dtype=np.int64)
-        p = np.floor(pdf[close].to_numpy(dtype=float) * 1e6 + 0.5).astype(
-            np.int64
-        )
+        p = pd_u6(pdf[close])
         m = len(r)
         regime = np.empty(m, dtype=np.int32)
         lv = np.empty(m, dtype=np.int64)
@@ -4633,4 +4416,4 @@ def regime_conditional_holt(
             forecast=(lv + tr) / 1e6,
         )
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order=[order_col])

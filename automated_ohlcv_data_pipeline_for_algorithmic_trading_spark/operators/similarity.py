@@ -764,16 +764,6 @@ def sq8_quantize(
     )
 
 
-def _int_dot(a: Column, b: Column) -> Column:
-    """Exact integer dot product (long accumulator; |q|<=127 so a
-    4096-dim dot is ~6.6e7 — nowhere near overflow)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-
-
 def sq8_knn(
     queries: DataFrame,
     corpus: DataFrame,
@@ -1289,29 +1279,6 @@ def _pq_fit(
     # downstream
     rows = [(r["sub"], r["cell"], list(r["centroid"])) for r in cents.collect()]
     return spark.createDataFrame(rows, "sub int, cell int, centroid array<double>")
-
-
-def pq_codebooks(
-    corpus: DataFrame,
-    m: int = 16,
-    k: int = 16,
-    n_iter: int = 2,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Product-quantization codebooks: a deterministic seeded-Lloyd
-    k-means per SUBSPACE — the unit-NORMALIZED vector is split into
-    ``m`` contiguous ``dim/m``-dim slices and each slice gets its own
-    ``k``-entry codebook; all m fits advance together in one fused job
-    per Lloyd round (see :func:`_pq_fit`). Same md5-bottom-k seed rows
-    in every subspace, so the whole fit replays in SQL.
-
-    Returns (sub int, cell int, centroid array<double>) — m*k tiny
-    rows, broadcast everywhere downstream.
-    """
-    base, el = _pq_exploded(corpus, m, dim, id_col, vec_col)
-    return _pq_fit(base, el, k, n_iter, dim // m)
 
 
 def pq_index(

@@ -1,12 +1,15 @@
-"""A/B drift check (VERDICT r5 ask #3): time the queries that moved
->20% between BENCH_r04 and BENCH_r05 on the round-4 snapshot vs HEAD,
-back-to-back on the same machine in one sitting, interleaved A/B so
+"""In-sitting A/B timing of registry queries: a baseline checkout vs
+this checkout, back-to-back on the same machine, interleaved A B A B so
 slow machine drift cancels. Each variant runs in its own subprocess
 with bench.py's protocol (sf0.1, warm-up pass at sf0.001, min over
 passes, cache-clear + gc between queries).
 
-Usage: python scripts/ab_bench.py /tmp/r4wt [query ...]
-Prints one JSON line per (variant, round) and a final summary table.
+Usage: python scripts/ab_bench.py BASELINE_ROOT QUERY [QUERY ...]
+
+BASELINE_ROOT is a second checkout of the repo (e.g. from
+``git archive``) and at least one query name is required
+(``etl_bronze_silver_500sym`` times bench.py's ETL metric). Prints one
+JSON line per (variant, round) and a final summary table.
 """
 
 from __future__ import annotations
@@ -14,15 +17,9 @@ from __future__ import annotations
 import json
 import subprocess
 import sys
+from pathlib import Path
 
-SUSPECTS = [
-    "d_bpe_learn",
-    "d_bpe_token_counts",
-    "emb_semdedup",
-    "x_heikin_ashi",
-    "x_supertrend",
-    "etl_bronze_silver_500sym",
-]
+HEAD_ROOT = str(Path(__file__).resolve().parent.parent)
 
 RUNNER = r"""
 import json, os, sys, time, gc
@@ -115,20 +112,21 @@ def run_variant(root: str, names: list[str]) -> dict:
 
 
 def main() -> None:
-    r4_root = sys.argv[1] if len(sys.argv) > 1 else "/tmp/r4wt"
-    names = sys.argv[2:] or SUSPECTS
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    base_root, names = sys.argv[1], sys.argv[2:]
     rounds = []
     for i in range(2):  # interleave: A B A B
-        a = run_variant(r4_root, names)
-        print(f"pass{i} r4  : {json.dumps(a)}", flush=True)
-        b = run_variant("/root/repo", names)
+        a = run_variant(base_root, names)
+        print(f"pass{i} base: {json.dumps(a)}", flush=True)
+        b = run_variant(HEAD_ROOT, names)
         print(f"pass{i} head: {json.dumps(b)}", flush=True)
         rounds.append((a, b))
-    print(f"\n{'query':28s} {'r4-best':>8s} {'head-best':>9s} {'ratio':>6s}")
+    print(f"\n{'query':28s} {'base-best':>9s} {'head-best':>9s} {'ratio':>6s}")
     for n in names:
         av = min(r[0].get(n, 9e9) for r in rounds if isinstance(r[0].get(n), float))
         bv = min(r[1].get(n, 9e9) for r in rounds if isinstance(r[1].get(n), float))
-        print(f"{n:28s} {av:8.2f} {bv:9.2f} {bv / av:6.2f}")
+        print(f"{n:28s} {av:9.2f} {bv:9.2f} {bv / av:6.2f}")
 
 
 if __name__ == "__main__":

@@ -3,9 +3,9 @@
 from __future__ import annotations
 
 from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.operators.extension import (
-    apply_per_symbol,
     bollinger_bands,
     bollinger_bands_exact,
+    grouped_fold,
 )
 
 
@@ -14,12 +14,13 @@ def test_bollinger_via_extension_point(spark):
         ("A", i, 100.0 + (i % 5)) for i in range(1, 31)
     ] + [("B", i, 50.0) for i in range(1, 11)]
     df = spark.createDataFrame(rows, "symbol_clean string, t long, close double")
-    out = apply_per_symbol(
+    out = grouped_fold(
         df,
+        ["symbol_clean"],
         bollinger_bands(window=5, num_std=2.0),
         "symbol_clean string, t long, close double, "
         "bb_mid double, bb_upper double, bb_lower double",
-        ts_col="t",
+        order=["t"],
     )
     got = {(r["symbol_clean"], r["t"]): r for r in out.collect()}
     assert len(got) == 40
@@ -46,14 +47,14 @@ def test_bollinger_exact_matches_pandas_rolling(spark):
     )
     plain = {
         r["t"]: r
-        for r in apply_per_symbol(
-            df, bollinger_bands(window=20), schema, ts_col="t"
+        for r in grouped_fold(
+            df, ["symbol_clean"], bollinger_bands(window=20), schema, ["t"]
         ).collect()
     }
     exact = {
         r["t"]: r
-        for r in apply_per_symbol(
-            df, bollinger_bands_exact(window=20), schema, ts_col="t"
+        for r in grouped_fold(
+            df, ["symbol_clean"], bollinger_bands_exact(window=20), schema, ["t"]
         ).collect()
     }
     assert set(plain) == set(exact)
@@ -103,47 +104,67 @@ def test_ema_macd_exact_tracks_float_recurrence():
 
 def test_grouped_fold_matches_grouped_map_across_batch_boundaries(spark):
     """grouped_fold (mapInPandas over key-contiguous partitions) must
-    reproduce groupBy().applyInPandas() exactly — including groups that
-    SPAN Arrow batch boundaries (forced with a tiny maxRecordsPerBatch),
-    NULL keys, and single-row groups."""
+    reproduce groupBy().applyInPandas() over pandas-sorted groups exactly:
+    the fold itself does NOT sort, so grouped_fold alone must deliver each
+    group in (ts, eid) order with a NULL ts last (pandas'
+    na_position="last"), from shuffled input rows, for groups that SPAN
+    Arrow batch boundaries (forced with a tiny maxRecordsPerBatch), NULL
+    keys, and single-row groups. Float keys: NULL and NaN are one key."""
+    import random
+
+    import numpy as np
     import pandas as pd
-    from pyspark.sql import functions as F
 
-    from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.operators.extension import (
-        grouped_fold,
-    )
-
+    sizes = {"a": 20, "b": 1, "c": 13, None: 5, "d": 8}
     rows = []
-    # group sizes chosen to straddle the 7-row batches set below
-    for g, n in [("a", 20), ("b", 1), ("c", 13), (None, 5), ("d", 8)]:
+    for g, n in sizes.items():
         for i in range(n):
-            rows.append((g, i, float(i) * 1.5 + (hash(g) % 7 if g else 0)))
-    df = spark.createDataFrame(rows, "k string, seq int, v double")
-    schema = "k string, seq int, v double, csum double, n long"
+            # ts ties broken by eid: the two-column (timestamp, event_id)
+            # order shape; one NULL ts in "c", which must fold last
+            ts = None if (g, i) == ("c", 4) else i // 2
+            v = float(i) * 1.5 + (hash(g) % 7 if g else 0)
+            rows.append((g, ts, 100 - i, v))
+    random.Random(7).shuffle(rows)
+    df = spark.createDataFrame(rows, "k string, ts long, eid long, v double")
+    schema = "k string, ts long, eid long, v double, csum double, pos long, n long"
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["seq"])
-        return pdf.assign(csum=pdf["v"].cumsum(), n=len(pdf))
+        pos = np.arange(len(pdf))
+        return pdf.assign(csum=pdf["v"].cumsum(), pos=pos, n=len(pdf))
 
-    skey = lambda t: (t[0] is not None, t[0] or "", t[1])
+    def sorted_fold(pdf: pd.DataFrame) -> pd.DataFrame:
+        return fold(pdf.sort_values(["ts", "eid"]).reset_index(drop=True))
+
+    def fold_key(pdf: pd.DataFrame) -> pd.DataFrame:
+        return pd.DataFrame(
+            {"k": [pdf["k"].iloc[0]], "ts": [",".join(map(str, pdf["ts"]))]}
+        )
+
+    fk = spark.createDataFrame(
+        [(None, 5), (float("nan"), 2), (1.5, 3), (float("nan"), 4), (None, 1)],
+        "k double, ts long",
+    )
+    skey = lambda t: (t[0] is not None, t[0] or "", t[5])
+
+    def rows_of(frame, key):
+        return sorted(map(tuple, frame.collect()), key=key)
+
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     try:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
-        got = sorted(
-            (tuple(r) for r in grouped_fold(df, ["k"], fold, schema).collect()),
-            key=skey,
+        got = rows_of(grouped_fold(df, ["k"], fold, schema, order=["ts", "eid"]), skey)
+        float_keys = rows_of(
+            grouped_fold(fk, ["k"], fold_key, "k double, ts string", order=["ts"]), str
         )
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-    want = sorted(
-        (
-            tuple(r)
-            for r in df.groupBy("k").applyInPandas(fold, schema=schema).collect()
-        ),
-        key=skey,
-    )
+    want = rows_of(df.groupBy("k").applyInPandas(sorted_fold, schema=schema), skey)
     assert got == want
     # every group fully folded exactly once: per-group n equals group size
-    sizes = {g: n for g, n in [("a", 20), ("b", 1), ("c", 13), (None, 5), ("d", 8)]}
-    for k, _seq, _v, _c, n in got:
+    for k, ts, _eid, _v, _c, pos, n in got:
         assert n == sizes[k]
+        if ts is None:
+            assert pos == n - 1  # NULL order value folds last
+    # Arrow turns a NULL double key into NaN and a NaN key back into NULL:
+    # the NULL and NaN rows are ONE group, folded once, in ts order
+    assert float_keys == [(1.5, "3"), (None, "1,2,4,5")]

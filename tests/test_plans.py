@@ -186,3 +186,65 @@ def test_keltner_windows_share_one_exchange(spark, sf_dir):
     plan = physical(df)
     n_hash_exchanges = plan.count("Exchange hashpartitioning")
     assert n_hash_exchanges <= 2, plan[:4000]
+
+
+#: Every registry query whose plan runs operators.extension.grouped_fold:
+#: x_bollinger_bands … x_regime_holt call it directly (x_forecast_backtest
+#: four times); x_force_index and x_elder_ray reach it through ema_fold.
+FOLD_QUERIES = (
+    "x_bollinger_bands", "x_ema_macd", "x_heikin_ashi", "x_supertrend",
+    "x_adx", "x_psar", "x_trix", "x_kama", "x_vidya", "x_klinger",
+    "x_garch_vol", "x_nvi_pvi", "x_dema_tema", "x_kalman", "x_mass_index",
+    "x_renko", "x_tsi", "x_ppo", "x_zigzag", "x_alligator", "x_holt_linear",
+    "x_t3", "x_mcginley", "x_elder_impulse", "x_holt_winters",
+    "x_holt_winters_mul", "x_forecast_backtest", "x_regime_viterbi",
+    "x_regime_holt", "x_force_index", "x_elder_ray",
+)
+
+
+def _children(node):
+    kids = node.children()
+    return [kids.apply(i) for i in range(kids.size())]
+
+
+def _nodes(node, stop=None):
+    """Pre-order walk of a physical plan; does not descend below nodes
+    named ``stop``."""
+    yield node
+    for c in _children(node):
+        if c.nodeName() != stop:
+            yield from _nodes(c, stop)
+        else:
+            yield c
+
+
+def _by_num(node) -> bool:
+    return (
+        node.nodeName() == "Exchange"
+        and node.shuffleOrigin().toString() == "REPARTITION_BY_NUM"
+    )
+
+
+@pytest.mark.parametrize("name", FOLD_QUERIES)
+def test_fold_input_is_sorted_by_key_and_order_once(spark, sf_dir, name):
+    """grouped_fold alone partitions and orders a fold's input: under
+    every MapInPandas the Sort orders by the hash keys AND the order
+    columns (more columns than the Exchange hashes on), and each fold
+    pays exactly one REPARTITION_BY_NUM shuffle. Plans only; nothing
+    runs."""
+    import __spark_entry__ as E
+
+    plan = E.queries()[name](spark, sf_dir)._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    folds = [n for n in _nodes(plan) if n.nodeName() == "MapInPandas"]
+    assert folds, name
+    for m in folds:
+        (sort,) = _children(m)
+        assert sort.nodeName() == "Sort", sort.toString()
+        (exchange,) = _children(sort)
+        assert _by_num(exchange), exchange.toString()
+        n_hash = exchange.outputPartitioning().expressions().size()
+        assert sort.sortOrder().size() > n_hash, sort.toString()
+        # one shuffle between this fold and the next fold below it
+        assert sum(map(_by_num, _nodes(m, stop="MapInPandas"))) == 1, name
