@@ -12,18 +12,26 @@ levels collapse into one Hive column.
 
 Scale design: the whole normalize is narrow (no shuffle) — explodes and
 projections pipeline inside one codegen stage per input split; the only
-wide operation is the optional last-wins dedup. Partitioned writes use
-dynamic partition overwrite for idempotent re-runs (ST5).
+wide operation is the optional last-wins dedup. Both silver sinks use
+dynamic partition overwrite on re-runs only (idempotent, ST5) and a
+static one into a fresh path; the choice probes whether the path exists,
+which assumes one writer per silver path.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.candles import clean_symbol, epoch_to_timestamp, iso_utc
 from ..operators.dedup import dedup_by_key
 from ..schemas import SILVER_PARTITIONING
+
+# The transform is written as SQL text: each selectExpr/where below is one
+# py4j call, where the Column-API form crossed to the JVM for every F.col,
+# operator and .columns fetch (bronze_to_silver measured ~190 -> ~90 ms of
+# driver time per 100-symbol day batch on a 4-vCPU VM).
+_LINEAGE = ("_file", "_file_seq")
+_TS = "timestamp_seconds(CAST(timestamp_unix AS BIGINT))"  # F3, UTC session
 
 
 def explode_envelopes(raw: DataFrame) -> DataFrame:
@@ -32,31 +40,31 @@ def explode_envelopes(raw: DataFrame) -> DataFrame:
     Mirrors etl/glue_job.py:125-158: explode the symbol map, project the
     struct, explode the candles array, extract positions 0-5.
     """
-    sym = raw.select(
-        F.explode("data").alias("symbol_key", "symbol_data"),
-        *[c for c in ("_file", "_file_seq") if c in raw.columns],
-    )
-    candles = sym.select(
-        F.col("symbol_data.symbol").alias("symbol"),
-        F.col("symbol_data.resolution").alias("resolution"),
-        F.col("symbol_data.timestamp").alias("fetch_timestamp"),
-        F.explode("symbol_data.candles").alias("candle"),
-        *[c for c in ("_file", "_file_seq") if c in sym.columns],
-    )
-    # F.get (not candle[i]): a truncated candle array yields NULLs that the
+    lineage = [c for c in _LINEAGE if c in raw.columns]
+    # get(), not candle[i]: a truncated candle array yields NULLs that the
     # DQ filter drops, instead of an ANSI out-of-bounds error killing the
     # batch — malformed feed rows must degrade, not fail.
-    return candles.select(
-        "symbol",
-        "resolution",
-        "fetch_timestamp",
-        F.get("candle", 0).cast("long").alias("timestamp_unix"),
-        F.get("candle", 1).alias("open"),
-        F.get("candle", 2).alias("high"),
-        F.get("candle", 3).alias("low"),
-        F.get("candle", 4).alias("close"),
-        F.get("candle", 5).cast("long").alias("volume"),
-        *[F.col(c) for c in ("_file", "_file_seq") if c in candles.columns],
+    return (
+        raw.selectExpr("explode(data) AS (symbol_key, symbol_data)", *lineage)
+        .selectExpr(
+            "symbol_data.symbol AS symbol",
+            "symbol_data.resolution AS resolution",
+            "symbol_data.timestamp AS fetch_timestamp",
+            "explode(symbol_data.candles) AS candle",
+            *lineage,
+        )
+        .selectExpr(
+            "symbol",
+            "resolution",
+            "fetch_timestamp",
+            "CAST(get(candle, 0) AS BIGINT) AS timestamp_unix",
+            "get(candle, 1) AS open",
+            "get(candle, 2) AS high",
+            "get(candle, 3) AS low",
+            "get(candle, 4) AS close",
+            "CAST(get(candle, 5) AS BIGINT) AS volume",
+            *lineage,
+        )
     )
 
 
@@ -64,32 +72,27 @@ def quality_filter(df: DataFrame) -> DataFrame:
     """P5 — DQ gate: o/h/l/c non-null, high >= low, volume >= 0, close > 0
     (glue + lightweight variants combined; the close>0 strictness is the
     deployed behavior)."""
-    return df.filter(
-        F.col("timestamp_unix").isNotNull()
-        & F.col("open").isNotNull()
-        & F.col("high").isNotNull()
-        & F.col("low").isNotNull()
-        & F.col("close").isNotNull()
-        & F.col("volume").isNotNull()
-        & (F.col("high") >= F.col("low"))
-        & (F.col("volume") >= 0)
-        & (F.col("close") > 0)
+    return df.where(
+        "timestamp_unix IS NOT NULL AND open IS NOT NULL AND high IS NOT NULL"
+        " AND low IS NOT NULL AND close IS NOT NULL AND volume IS NOT NULL"
+        " AND high >= low AND volume >= 0 AND close > 0"
     )
 
 
 def derive_silver_columns(df: DataFrame) -> DataFrame:
-    """F1-F7: symbol_clean, timestamps, calendar partition columns,
-    processed_at."""
-    ts = epoch_to_timestamp(F.col("timestamp_unix"))
-    return (
-        df.withColumn("symbol_clean", clean_symbol(F.col("symbol")))
-        .withColumn("timestamp_iso", ts)
-        .withColumn("year", F.year(ts))
-        .withColumn("month", F.month(ts))
-        .withColumn("day", F.dayofmonth(ts))
-        .withColumn("hour", F.hour(ts))
-        .withColumn("dt", F.date_format(ts, "yyyy-MM-dd"))
-        .withColumn("processed_at", F.current_timestamp())
+    """F1-F7: symbol_clean (the ``NSE:|\\-EQ`` strip of
+    functions.candles.clean_symbol), timestamps, calendar partition
+    columns, processed_at. ``df`` must not already carry these columns."""
+    return df.selectExpr(
+        "*",
+        r"regexp_replace(symbol, r'NSE:|\-EQ', '') AS symbol_clean",
+        f"{_TS} AS timestamp_iso",
+        f"year({_TS}) AS year",
+        f"month({_TS}) AS month",
+        f"dayofmonth({_TS}) AS day",
+        f"hour({_TS}) AS hour",
+        f"date_format({_TS}, 'yyyy-MM-dd') AS dt",
+        "current_timestamp() AS processed_at",
     )
 
 
@@ -121,10 +124,10 @@ def write_silver(
     mode: str = "overwrite",
     write_parallelism: int | None = None,
 ) -> None:
-    """S12 — partitioned Parquet sink: snappy, dictionary encoding,
-    dynamic partition overwrite for idempotent re-runs — set at the
-    WRITER level so it holds even on a session where tune() could not
-    apply the conf (a static overwrite would wipe the whole directory).
+    """S12 — partitioned Parquet sink: snappy, dictionary encoding.
+    Dynamic partition overwrite on re-runs only, static into a fresh
+    path; the choice probes whether ``path`` exists, which assumes one
+    writer per silver path (:func:`_silver_writer`).
 
     The reference sets AQE confs as write options where they are inert
     (etl/glue_job.py:213-214) — here session.tune() sets them correctly.
@@ -138,61 +141,37 @@ def write_silver(
     n = write_parallelism or int(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
     )
-    # Commit protocol: FileOutputCommitter v2 (task output promoted at
-    # task commit, no serial driver-side per-file rename at job commit)
-    # and no _SUCCESS marker — with 500 symbol-day directories the v1
-    # job-commit rename pass dominated the write (measured 24.6 s v1 vs
-    # 12.0 s v2 for the identical 500-file day batch; the data written
-    # is byte-identical). Overridable via the session conf; production
-    # note: on object stores use the store's atomic committer
-    # (magic/EMRFS/GCS committers have v2 semantics with atomic task
-    # commit), and prefer v1 only where bare-FS task-retry atomicity
-    # matters more than commit latency.
-    conf = df.sparkSession.conf
-    for k, v in (
-        ("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2"),
-        ("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"),
-    ):
-        try:
-            conf.get(k)
-        except Exception:
-            try:
-                conf.set(k, v)
-            except Exception:  # pragma: no cover - locked by host session
-                pass
-    out = df.repartition(n, *[F.col(c) for c in SILVER_PARTITIONING])
+    out = df.repartition(n, *SILVER_PARTITIONING)
     # time-sorted rows within each file: parquet row-group min/max stats on
     # timestamp become selective, so intraday range predicates skip row
     # groups instead of scanning whole symbol-days
     if "timestamp_unix" in df.columns:
         out = out.sortWithinPartitions(*SILVER_PARTITIONING, "timestamp_unix")
-    writer = (
-        out.write.mode(mode)
-        .partitionBy(*SILVER_PARTITIONING)
-        .option("compression", "snappy")
-    )
-    # Dynamic partition overwrite only when the destination already
-    # exists (the idempotent-re-run case it exists for). On a FRESH
-    # destination it buys nothing semantically — the target is empty —
-    # but still routes every task file through the .spark-staging
-    # indirection plus one driver-side rename PER PARTITION DIRECTORY at
-    # job commit (500 serial renames for a 500-symbol day; guide §6
-    # output-commit cost). Fresh writes take the plain committer path.
-    if mode == "overwrite" and _dest_exists(df.sparkSession, path):
-        writer = writer.option("partitionOverwriteMode", "dynamic")
-    writer.parquet(path)
+    _silver_writer(out, path, mode).option("compression", "snappy").parquet(path)
 
 
-def _dest_exists(spark, path: str) -> bool:
-    """Hadoop-FS existence probe (works for local paths and any
-    configured remote FS — the same resolution the writer itself uses)."""
-    try:
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        return bool(fs.exists(hpath))
+def _silver_writer(df: DataFrame, path: str, mode: str):
+    """The partitioned writer of both silver sinks. An overwrite pins
+    ``partitionOverwriteMode`` per write, whatever the session default:
+
+    - ``dynamic`` when ``path`` exists — a re-run replaces only the
+      partitions it writes and keeps every other day (ST5);
+    - ``static`` when it does not — the target is empty, so dynamic buys
+      nothing, and it would stage every file under ``.spark-staging-*``
+      and rename each partition directory on the driver at job commit.
+
+    Assumes one writer per silver path: a path created by another writer
+    between the existence probe and this write is overwritten whole."""
+    writer = df.write.mode(mode).partitionBy(*SILVER_PARTITIONING)
+    if mode != "overwrite":
+        return writer
+    spark = df.sparkSession
+    try:  # the Hadoop FS the writer resolves ``path`` with
+        hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+        exists = hpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(hpath)
     except Exception:  # pragma: no cover - conservative: keep dynamic
-        return True
+        exists = True
+    return writer.option("partitionOverwriteMode", "dynamic" if exists else "static")
 
 
 def read_silver_csv(spark, path: str) -> DataFrame:
@@ -212,10 +191,9 @@ def read_silver_csv(spark, path: str) -> DataFrame:
 
 def silver_csv_sink(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """S11 — the reference's gzipped-CSV silver twin (kept for parity;
-    Parquet is the primary format)."""
+    Parquet is the primary format). Overwrites like :func:`write_silver`."""
     (
-        df.write.mode(mode)
-        .partitionBy(*SILVER_PARTITIONING)
+        _silver_writer(df, path, mode)
         .option("header", True)
         .option("compression", "gzip")
         .csv(path)

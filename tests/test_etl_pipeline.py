@@ -4,6 +4,8 @@ declared SQL set."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -19,13 +21,18 @@ from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.plans.analytics
 from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.plans.etl import (
     bronze_to_silver,
     quality_filter,
+    read_silver_csv,
     run_metadata,
+    silver_csv_sink,
     write_silver,
 )
 from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.plans.sql_views import (
     DECLARED_QUERIES,
     register_ohlcv_view,
     run_declared_query,
+)
+from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.schemas import (
+    RAW_ENVELOPE_SCHEMA,
 )
 from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.sources.mock import (
     write_mock_envelope_files,
@@ -100,6 +107,85 @@ def test_quality_filter_drops_bad_rows(spark):
         "close double, volume long",
     )
     assert quality_filter(df).count() == 1
+
+    # the same defects at envelope level, through explode_envelopes' get():
+    # under ANSI mode a malformed candle drops instead of failing the batch
+    good = [1700001200.0, 10.0, 11.0, 9.0, 10.5, 5.0]
+    env = {
+        "NSE:X-EQ": {
+            "symbol": "NSE:X-EQ", "resolution": "5", "timestamp": "t",
+            "candles": [
+                good,
+                [1700000000.0, 10.0, 11.0],                   # truncated
+                [1700000300.0, None, 11.0, 9.0, 10.0, 5.0],   # NULL element
+                [1700000600.0, 10.0, 11.0, 9.0, 0.0, 5.0],    # close = 0
+                [1700000900.0, 10.0, 11.0, 9.0, -1.0, 5.0],   # close < 0
+                [1700001500.0, 10.0, 9.0, 11.0, 10.0, 5.0],   # high < low
+                None,                                         # NULL candle
+            ],
+        },
+        "NSE:Y-EQ": None,                                     # NULL symbol entry
+    }
+    raw = spark.createDataFrame([(env, None)], RAW_ENVELOPE_SCHEMA)
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        out = bronze_to_silver(raw, dedup="last").collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert [(r["symbol_clean"], r["timestamp_unix"], r["close"]) for r in out] == [
+        ("X", 1700001200, 10.5)
+    ]
+
+
+def _overwrite_mode_of_last_write(spark):
+    """``partitionOverwriteMode`` among the options of the newest
+    InsertIntoHadoopFsRelationCommand in the SQL status store."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    for i in range(execs.size() - 1, -1, -1):
+        plan = execs.apply(i).physicalPlanDescription()
+        if "InsertIntoHadoopFsRelationCommand" in plan:
+            m = re.search(r"partitionOverwriteMode=(\w+)", plan)
+            return m and m.group(1)
+    return None
+
+
+@pytest.mark.parametrize("sink", ["parquet", "csv"])
+def test_silver_overwrite_static_when_fresh_dynamic_on_rerun(spark, raw_dir, tmp_path, sink):
+    """A fresh silver write is a static overwrite (no staging directory);
+    a re-run into the existing path is a dynamic one even when the session
+    default is static, so it replaces only the partitions it writes."""
+    write, read = {
+        "parquet": (write_silver, spark.read.parquet),
+        "csv": (silver_csv_sink, lambda p: read_silver_csv(spark, p)),
+    }[sink]
+    out = str(tmp_path / "silver")
+    silver = bronze_to_silver(read_raw_envelopes(spark, raw_dir), dedup="last")
+    write(silver, out)
+    assert _overwrite_mode_of_last_write(spark) == "static"
+
+    rerun = (
+        silver.where("symbol_clean = 'TCS' AND dt = '2024-01-01'")
+        .orderBy("timestamp_unix")
+        .limit(10)
+    )
+    default = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
+    try:
+        write(rerun, out)
+        assert _overwrite_mode_of_last_write(spark) == "dynamic"
+    finally:
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", default)
+    counts = {
+        (r["symbol_clean"], str(r["dt"])): r["count"]
+        for r in read(out).groupBy("symbol_clean", "dt").count().collect()
+    }
+    assert counts == {
+        (s, d): 10 if (s, d) == ("TCS", "2024-01-01") else 75
+        for s in ("RELIANCE", "TCS", "INFY")
+        for d in ("2024-01-01", "2024-01-02")
+    }
 
 
 def test_analytics_queries(silver):
