@@ -147,6 +147,16 @@ def sql_davg(expr: str) -> str:
     return f"CAST(sum(CAST(({expr}) AS DECIMAL(38,6))) AS DOUBLE) / count({expr})"
 
 
+def dsum_sql(expr: str) -> str:
+    """:func:`dsum` as Spark SQL text under the current mode."""
+    return sql_dsum(expr) if EXACT_MODE else f"sum({expr})"
+
+
+def davg_sql(expr: str) -> str:
+    """:func:`davg` as Spark SQL text under the current mode."""
+    return sql_davg(expr) if EXACT_MODE else f"avg({expr})"
+
+
 def sql_dstddev(expr: str) -> str:
     n = f"CAST(count({expr}) AS DOUBLE)"
     sx = f"CAST(sum(CAST(({expr}) AS DECIMAL(38,6))) AS DOUBLE)"

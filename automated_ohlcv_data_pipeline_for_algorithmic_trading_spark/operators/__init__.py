@@ -6,7 +6,7 @@ from .rollup import (  # noqa: F401
     latest_snapshot,
     conditional_counts,
 )
-from .resample import resample_candles, resample_series  # noqa: F401
+from .resample import resample_series  # noqa: F401
 from .dedup import dedup_by_key, dedup_by_key_agg  # noqa: F401
 from .windows import sma, sma_chunked, rsi, daily_window_summary  # noqa: F401
 from .topk import top_k, tail_limit, top_movers  # noqa: F401

@@ -17,38 +17,6 @@ from pyspark.sql import functions as F
 from ..functions.exact import dsum
 
 
-def resample_candles(
-    df: DataFrame,
-    minutes: int,
-    keys: Sequence[str],
-    ts_col: str = "timestamp_iso",
-    open_col: str = "open",
-    high_col: str = "high",
-    low_col: str = "low",
-    close_col: str = "close",
-    volume_col: str = "volume",
-    tiebreak: str | None = None,
-) -> DataFrame:
-    """A4 — aggregate 5m candles into N-minute candles: open = open of
-    earliest source candle in the bucket, close = close of the latest,
-    high = max, low = min, volume = sum; sorted ascending."""
-    order = F.struct(F.col(ts_col), F.col(tiebreak)) if tiebreak else F.col(ts_col)
-    w = F.window(F.col(ts_col), f"{minutes} minutes")
-    out = (
-        df.groupBy(*[F.col(k) for k in keys], w.alias("bucket"))
-        .agg(
-            F.min_by(F.col(open_col), order).alias("open"),
-            F.max(high_col).alias("high"),
-            F.min(low_col).alias("low"),
-            F.max_by(F.col(close_col), order).alias("close"),
-            dsum(volume_col, "volume"),
-        )
-        .withColumn("bucket_start", F.col("bucket.start"))
-        .drop("bucket")
-    )
-    return out.orderBy(*keys, "bucket_start")
-
-
 def resample_series(
     df: DataFrame,
     minutes: int,

@@ -74,37 +74,6 @@ def daily_rollup(
     return series_rollup(df, gb, ts_col, price_col, volume_col, tiebreak)
 
 
-def ohlcv_daily_rollup(
-    df: DataFrame,
-    keys: Sequence[str],
-    ts_col: str = "timestamp_iso",
-    open_col: str = "open",
-    high_col: str = "high",
-    low_col: str = "low",
-    close_col: str = "close",
-    volume_col: str = "volume",
-    tiebreak: str | None = "timestamp_unix",
-    date_alias: str = "trade_date",
-) -> DataFrame:
-    """A1 over true OHLCV candles: open = FIRST of the open column by ts,
-    close = LAST of the close column, high/low = max/min of their own
-    columns, volume = sum, avg_price = mean(close) — exactly the
-    reference's stats block (analytics/lambda_analytics.py:146-166:
-    ``df['open'].iloc[0]``, ``df['close'].iloc[-1]``, ``high.max()``,
-    ``low.min()``, ``volume.sum()``, ``close.mean()``)."""
-    key = _order_key(ts_col, tiebreak)
-    gb = [*[F.col(k) for k in keys], F.to_date(F.col(ts_col)).alias(date_alias)]
-    return df.groupBy(*gb).agg(
-        F.min_by(F.col(open_col), key).alias("open"),
-        F.max(high_col).alias("high"),
-        F.min(low_col).alias("low"),
-        F.max_by(F.col(close_col), key).alias("close"),
-        dsum(volume_col, "volume"),
-        davg(close_col, "avg_price"),
-        F.count(F.lit(1)).alias("num_records"),
-    )
-
-
 def symbol_stats(
     df: DataFrame,
     keys: Sequence[str],

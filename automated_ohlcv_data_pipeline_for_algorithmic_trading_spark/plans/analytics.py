@@ -1,53 +1,110 @@
-"""The query APIs (SURVEY.md SS3.1-3.2) as pure DataFrame functions over
-the silver candle table: the four analytics Lambda query types
-(analytics/lambda_analytics.py) and the REST handler pipelines
-(api/api_handler.py), minus the reference's silent truncation caps
-(SURVEY.md SS7.8 — we take explicit ranges instead).
+"""The query APIs (SURVEY.md SS3.1-3.2) over the silver candle table: the
+four analytics Lambda query types (analytics/lambda_analytics.py) and the
+REST handler pipelines (api/api_handler.py), minus the reference's silent
+truncation caps (SURVEY.md SS7.8 — we take explicit ranges instead).
 
-Each function is lazy; partition pruning on (symbol_clean, year, month,
-day) replaces the reference's hand-built S3 prefixes (SS4).
+Each request is ONE lazy ``spark.sql`` statement over the silver DataFrame:
+one parse, not dozens of py4j calls. PySpark's ``{}`` formatter binds the
+request values (symbol, dates) as escaped SQL literals; ``interval`` and
+``limit`` enter the text as validated ints. Pruning on (symbol_clean, dt)
+replaces the reference's hand-built S3 prefixes (SS4). A one-symbol request
+coalesces its pruned scan to one partition before the dedup window, the
+aggregate and the sort, so it plans no Exchange and runs as one task, which
+the request bounds: one symbol's directories within the requested dates, or
+without dates one symbol's history (~19k 5-minute candles a year).
+All-symbol requests keep their shuffle.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import operator
+import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.candles import price_change_cols
+from ..functions.exact import davg_sql, dsum_sql
 from ..functions.timeparse import interval_to_minutes, period_to_timedelta
-from ..operators.dedup import dedup_by_key
-from ..operators.resample import resample_candles
-from ..operators.rollup import latest_snapshot, ohlcv_daily_rollup
-from ..operators.topk import tail_limit, top_movers
+from ..operators.topk import top_movers
+
+_SILVER = "SELECT * FROM IDENTIFIER({silver}) WHERE "
+_ONE_SYMBOL = "SELECT /*+ COALESCE(1) */ * FROM IDENTIFIER({silver}) WHERE symbol_clean = {symbol}"
 
 
-def _day_filter(df: DataFrame, date: str) -> DataFrame:
+def _sql(silver: DataFrame, text: str, **values: str | int) -> DataFrame:
+    """One statement: ``{silver}`` names ``silver``; any other ``{name}`` is
+    the SQL literal of ``values[name]``, a str or an int."""
+    if any(isinstance(v, bool) or not isinstance(v, (str, int)) for v in values.values()):
+        raise TypeError(f"request values must be str or int, got {values!r}")
+    spark, view = silver.sparkSession, f"_silver_{uuid.uuid4().hex}"
+    silver.createOrReplaceTempView(view)
+    try:
+        return spark.sql(text, silver=view, **values)
+    finally:  # not Catalog.dropTempView: it would uncache a cached ``silver``
+        spark._jsparkSession.sessionState().catalog().dropTempView(view)
+
+
+def _day(silver: DataFrame, date: str) -> tuple[str, dict]:
+    """One day: ``dt`` prunes the directory; year/month/day hit the
+    row-group stats of input without ``dt`` (a one-file extract)."""
     d = dt.date.fromisoformat(date)
-    # dt equality prunes the partition directory; the year/month/day
-    # predicates additionally hit parquet row-group stats when the input
-    # is an unpartitioned table (e.g. a one-file extract)
-    preds = (F.col("year") == d.year) & (F.col("month") == d.month) & (F.col("day") == d.day)
-    if "dt" in df.columns:
-        preds = (F.col("dt") == d.isoformat()) & preds
-    return df.filter(preds)
+    where = "year = {y} AND month = {m} AND day = {d}"
+    where = f"dt = {{date}} AND {where}" if "dt" in silver.columns else where
+    return where, {"date": d.isoformat(), "y": d.year, "m": d.month, "d": d.day}
+
+
+def _range(silver: DataFrame, from_date: str | None, to_date: str | None) -> tuple[str, dict]:
+    """`` AND ``-joined inclusive day bounds on the candle time, repeated on
+    ``dt`` (when present) to prune directories."""
+    cols = ["to_date(timestamp_iso)"] + (["dt"] if "dt" in silver.columns else [])
+    where, values = "", {}
+    for name, op, date in (("lo", ">=", from_date), ("hi", "<=", to_date)):
+        if date:
+            values[name] = dt.date.fromisoformat(date).isoformat()
+            where += "".join(f" AND {c} {op} {{{name}}}" for c in cols)
+    return where, values
+
+
+def _bar() -> str:
+    """The OHLCV bar of a candle group: open of the first candle by
+    (timestamp_iso, timestamp_unix), close of the last, exact volume sum."""
+    key = "struct(timestamp_iso, timestamp_unix)"
+    return (
+        f"min_by(open, {key}) AS open, max(high) AS high, min(low) AS low, "
+        f"max_by(close, {key}) AS close, {dsum_sql('volume')} AS volume"
+    )
+
+
+def _rollup(rows: str) -> str:
+    """A1 per (symbol, day): the OHLCV bar, avg_price = mean(close),
+    num_records (analytics/lambda_analytics.py:146-166)."""
+    return (
+        f"SELECT symbol_clean, to_date(timestamp_iso) AS trade_date, {_bar()}, "
+        f"{davg_sql('close')} AS avg_price, count(1) AS num_records "
+        f"FROM ({rows}) GROUP BY symbol_clean, to_date(timestamp_iso)"
+    )
 
 
 def symbol_stats(silver: DataFrame, symbol_clean: str, date: str) -> DataFrame:
     """query_type=symbol_stats — one symbol, one day, the A1 rollup
     (analytics/lambda_analytics.py:99-207)."""
-    day = _day_filter(silver.filter(F.col("symbol_clean") == symbol_clean), date)
-    return ohlcv_daily_rollup(day, ["symbol_clean"])
+    where, values = _day(silver, date)
+    return _sql(silver, _rollup(f"{_ONE_SYMBOL} AND {where}"), symbol=symbol_clean, **values)
 
 
 def daily_summary(silver: DataFrame, date: str) -> DataFrame:
-    """query_type=daily_summary — all symbols for a day, with derived
-    price-change columns, sorted by pct desc
+    """query_type=daily_summary — all symbols for a day with the F8
+    price-change columns (zero-open guarded), by pct desc
     (analytics/lambda_analytics.py:210-321)."""
-    day = _day_filter(silver, date)
-    rolled = ohlcv_daily_rollup(day, ["symbol_clean"])
-    return price_change_cols(rolled).orderBy(F.col("price_change_percent").desc())
+    where, values = _day(silver, date)
+    pct = "CASE WHEN open != 0 THEN ({}) / open * 100.0 ELSE 0.0 END AS {}"
+    return _sql(silver, (
+        f"SELECT *, close - open AS price_change, "
+        f"{pct.format('close - open', 'price_change_percent')}, high - low AS daily_range, "
+        f"{pct.format('high - low', 'volatility_percent')} FROM ({_rollup(_SILVER + where)}) "
+        "ORDER BY price_change_percent DESC"
+    ), **values)
 
 
 def date_range_stats(
@@ -55,14 +112,10 @@ def date_range_stats(
 ) -> DataFrame:
     """query_type=date_range — per-day rollups across a range; the
     reference loops days sequentially (analytics/lambda_analytics.py:324-344),
-    here it is one pruned scan + one groupBy."""
-    return ohlcv_daily_rollup(
-        silver.filter(
-            (F.col("symbol_clean") == symbol_clean)
-            & F.to_date("timestamp_iso").between(from_date, to_date)
-        ),
-        ["symbol_clean"],
-    ).orderBy("trade_date")
+    here it is one pruned scan + one aggregate."""
+    where, values = _range(silver, from_date, to_date)
+    text = _rollup(_ONE_SYMBOL + where) + " ORDER BY trade_date"
+    return _sql(silver, text, symbol=symbol_clean, **values)
 
 
 def top_movers_summary(
@@ -70,7 +123,8 @@ def top_movers_summary(
 ) -> tuple[DataFrame, DataFrame]:
     """query_type=top_movers — gainers/losers over ONE cached daily
     summary (the reference reuses its daily_summary result the same way,
-    analytics/lambda_analytics.py:393-403)."""
+    analytics/lambda_analytics.py:393-403); daily_summary of the same day
+    builds the same plan, so it reads the cache too."""
     summary = daily_summary(silver, date).cache()
     return top_movers(summary, limit=limit)
 
@@ -84,54 +138,56 @@ def ohlcv_endpoint(
     limit: int | None = None,
     dedup: str = "last",
 ) -> DataFrame:
-    """GET /ohlcv/{symbol} (SS3.1): symbol filter -> ts-range filter ->
-    last-wins dedup by timestamp -> asc sort -> tail limit -> optional
-    resample to the requested interval (api/api_handler.py:365-443,
-    :654-743)."""
-    df = silver.filter(F.col("symbol_clean") == symbol_clean)
-    if from_date:
-        df = df.filter(F.to_date("timestamp_iso") >= from_date)
-    if to_date:
-        # inclusive end-of-day bound (parse_date_to_timestamp 23:59:59,
-        # api/api_handler.py:305-328)
-        df = df.filter(F.to_date("timestamp_iso") <= to_date)
-    df = dedup_by_key(
-        df, ["symbol_clean", "timestamp_unix"], ["_file_seq", "fetch_timestamp"]
-        if "_file_seq" in df.columns else ["fetch_timestamp"], keep=dedup,
+    """GET /ohlcv/{symbol} (SS3.1): symbol filter -> inclusive day range
+    (parse_date_to_timestamp 23:59:59, api/api_handler.py:305-328) -> dedup
+    by timestamp, last (or first) by file sequence then fetch time ->
+    optional resample -> asc sort, or the last ``limit`` rows ascending
+    (api/api_handler.py:365-443, :654-743)."""
+    if dedup not in ("first", "last"):
+        raise ValueError(f"dedup must be 'first' or 'last', got {dedup!r}")
+    minutes, n = interval_to_minutes(interval), operator.index(limit or 0)
+    if minutes <= 0 or n < 0:
+        raise ValueError(f"bad interval {interval!r} or limit {limit!r}")
+    where, values = _range(silver, from_date, to_date)
+    seq = ["_file_seq", "fetch_timestamp"] if "_file_seq" in silver.columns else ["fetch_timestamp"]
+    order = ", ".join(f"{c} {'DESC' if dedup == 'last' else 'ASC'}" for c in seq)
+    rows = (
+        "SELECT * EXCEPT (_rn) FROM (SELECT *, row_number() OVER (PARTITION BY symbol_clean, "
+        f"timestamp_unix ORDER BY {order}) AS _rn FROM ({_ONE_SYMBOL}{where})) WHERE _rn = 1"
     )
-    minutes = interval_to_minutes(interval)
     if minutes != 5:
-        df = resample_candles(
-            df, minutes, ["symbol_clean"], "timestamp_iso",
-            tiebreak="timestamp_unix",
-        ).withColumnRenamed("bucket_start", "timestamp_iso")
-    if limit:
-        return tail_limit(df, "timestamp_iso", limit)
-    return df.orderBy("timestamp_iso")
+        rows = (
+            f"SELECT symbol_clean, {_bar()}, window.start AS timestamp_iso FROM ({rows}) "
+            f"GROUP BY symbol_clean, window(timestamp_iso, '{minutes} minutes')"
+        )
+    if n:
+        rows = f"SELECT * FROM ({rows}) ORDER BY timestamp_iso DESC LIMIT {n}"
+    text = f"SELECT * FROM ({rows}) ORDER BY timestamp_iso"
+    return _sql(silver, text, symbol=symbol_clean, **values)
 
 
 def historical_lookback(
     silver: DataFrame, symbol_clean: str, period: str, now: dt.datetime
 ) -> DataFrame:
-    """GET /historical/{symbol}?period=3m — period-token lookback with the
-    reference's 30d/365d month/year approximations
-    (api/api_handler.py:746-769); ``now`` is explicit for determinism."""
-    cutoff = now - period_to_timedelta(period)
-    return (
-        silver.filter(
-            (F.col("symbol_clean") == symbol_clean)
-            & (F.col("timestamp_iso") >= F.lit(cutoff))
-        )
-        .orderBy("timestamp_iso")
-    )
+    """GET /historical/{symbol}?period=3m — candles at or after ``now``
+    minus the period, with the reference's 30d/365d month/year
+    approximations (api/api_handler.py:746-769); ``now`` is explicit for
+    determinism (a naive one is local time, as ``F.lit`` reads it)."""
+    cutoff = round((now - period_to_timedelta(period)).timestamp() * 1_000_000)
+    where = " AND timestamp_iso >= timestamp_micros({cutoff})"
+    if "dt" in silver.columns:
+        where += " AND dt >= to_date(timestamp_micros({cutoff}))"
+    text = f"{_ONE_SYMBOL}{where} ORDER BY timestamp_iso"
+    return _sql(silver, text, symbol=symbol_clean, cutoff=cutoff)
 
 
 def latest_prices(silver: DataFrame) -> DataFrame:
-    """GET /latest — last candle per symbol, latest_price = its close
-    (api/api_handler.py:479-514)."""
-    return latest_snapshot(
-        silver, ["symbol_clean"], "timestamp_iso", tiebreak="timestamp_unix"
-    ).withColumn("latest_price", F.col("close"))
+    """GET /latest — the last candle per symbol by (timestamp_iso,
+    timestamp_unix), latest_price = its close (api/api_handler.py:479-514)."""
+    return _sql(silver, (
+        "SELECT r.*, r.close AS latest_price FROM (SELECT max_by(struct(*), struct("
+        "timestamp_iso, timestamp_unix)) AS r FROM IDENTIFIER({silver}) GROUP BY symbol_clean)"
+    ))
 
 
 def volatile_days(daily_summary_df: DataFrame, threshold: float = 2.0) -> DataFrame:

@@ -30,7 +30,7 @@ def main() -> None:
         daily_rollup,
         dedup_by_key,
         latest_snapshot,
-        resample_candles,
+        resample_series,
         sma,
     )
     from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.sources.mock import (
@@ -49,8 +49,8 @@ def main() -> None:
     timed("daily_rollup (A1)", daily_rollup(
         base, ["symbol"], "ts", "close", "volume", tiebreak="timestamp_unix"
     ), results)
-    timed("resample_15m (A4)", resample_candles(
-        base, 15, ["symbol"], "ts", tiebreak="timestamp_unix"
+    timed("resample_15m (A4)", resample_series(
+        base, 15, ["symbol"], "ts", "close", tiebreak="timestamp_unix"
     ), results)
     timed("dedup_last (A5)", dedup_by_key(
         base, ["symbol", "timestamp_unix"], ["fetch_seq"], keep="last"

@@ -4,8 +4,10 @@ declared SQL set."""
 
 from __future__ import annotations
 
+import datetime as dt
 import re
 
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
@@ -13,6 +15,7 @@ from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.plans.analytics
     available_symbols,
     daily_summary,
     date_range_stats,
+    historical_lookback,
     latest_prices,
     ohlcv_endpoint,
     symbol_stats,
@@ -41,6 +44,7 @@ from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.sources.raw_jso
     latest_file_only,
     read_raw_envelopes,
 )
+from scripts.verify_local import frame_fingerprint
 
 SYMBOLS = ["NSE:RELIANCE-EQ", "NSE:TCS-EQ", "NSE:INFY-EQ"]
 
@@ -53,12 +57,104 @@ def raw_dir(spark, tmp_path_factory):
 
 
 @pytest.fixture(scope="module")
-def silver(spark, raw_dir, tmp_path_factory):
+def silver_path(spark, raw_dir, tmp_path_factory):
     raw = read_raw_envelopes(spark, raw_dir)
-    silver_df = bronze_to_silver(raw, dedup="last")
-    out = tmp_path_factory.mktemp("silver")
-    write_silver(silver_df, str(out))
-    return spark.read.parquet(str(out))
+    out = str(tmp_path_factory.mktemp("silver"))
+    write_silver(bronze_to_silver(raw, dedup="last"), out)
+    return out
+
+
+@pytest.fixture(scope="module")
+def silver(spark, silver_path):
+    return spark.read.parquet(silver_path)
+
+
+T0 = 1704080700  # 2024-01-01 03:45 UTC
+
+
+@pytest.fixture(scope="module")
+def edge_path(spark, tmp_path_factory):
+    """Silver rows the mock ETL never writes: REV's candle at T0 is revised
+    by a later fetch; at T0+300 the later file (``_file_seq`` 2) carries the
+    earlier fetch time, so the tie-break order decides; ZERO's day opens at
+    0; O'X has a quote in its name. Two days of REV, one of the others."""
+    rows = [("REV", T0 + d * 86400 + 300 * k, 100.0 + k, 110.0 + k, 90.0 + k,
+             105.0 + k + d, 10 * (k + 1), "f1", 1) for d in (0, 1) for k in range(6)]
+    rows += [
+        ("REV", T0, 100.0, 112.0, 90.0, 101.5, 99, "f2", 2),
+        ("REV", T0 + 300, 101.0, 111.0, 91.0, 107.5, 77, "f0", 2),
+        ("ZERO", T0, 0.0, 5.0, 0.0, 4.0, 1, "f1", 1),
+        ("ZERO", T0 + 300, 4.0, 6.0, 3.0, 5.0, 2, "f1", 1),
+        ("O'X", T0, 50.0, 52.0, 49.0, 51.0, 3, "f1", 1),
+        ("O'X", T0 + 300, 51.0, 55.0, 50.0, 54.0, 4, "f1", 1),
+    ]
+    ts = "timestamp_seconds(timestamp_unix)"
+    df = spark.createDataFrame(
+        rows,
+        "symbol_clean string, timestamp_unix long, open double, high double, low double, "
+        "close double, volume long, fetch_timestamp string, _file_seq long",
+    ).selectExpr(
+        "concat('NSE:', symbol_clean, '-EQ') AS symbol", "*", f"{ts} AS timestamp_iso",
+        "'5' AS resolution", f"year({ts}) AS year", f"month({ts}) AS month",
+        f"day({ts}) AS day", f"hour({ts}) AS hour", f"date_format({ts}, 'yyyy-MM-dd') AS dt",
+    )
+    out = str(tmp_path_factory.mktemp("edge") / "silver")
+    df.write.partitionBy("symbol_clean", "dt").parquet(out)
+    return out
+
+
+def _duck(path):
+    """DuckDB over the silver files. Spark escapes the quote in a partition
+    directory name (``symbol_clean=O%27X``); DuckDB reads the name raw."""
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW silver AS SELECT * REPLACE (replace(symbol_clean, '%27', '''') "
+        f"AS symbol_clean) FROM read_parquet('{path}/*/*/*.parquet', "
+        "hive_partitioning = true, hive_types_autocast = false)"
+    )
+    return con
+
+
+def _plain(v):
+    """A collected value, engine-neutral: timestamps as epoch seconds."""
+    if isinstance(v, dt.datetime):
+        return int(v.timestamp())
+    return v.isoformat() if isinstance(v, dt.date) else v
+
+
+def _matches(con, got, sql, *params):
+    """Spark frame ``got`` equals DuckDB ``sql`` by frame_fingerprint over
+    the DuckDB columns, as perfbench checks the API; returns ``got``'s rows."""
+    cur = con.execute(sql, list(params))
+    cols = [d[0] for d in cur.description]
+    want = [[_plain(v) for v in r] for r in cur.fetchall()]
+    rows = got.collect()
+    fp = frame_fingerprint(cols, [[_plain(r[c]) for c in cols] for r in rows])
+    assert fp == frame_fingerprint(cols, want), (sql, params)
+    return rows
+
+
+_BAR = (
+    "arg_min(open, timestamp_unix) AS open, max(high) AS high, min(low) AS low, "
+    "arg_max(close, timestamp_unix) AS close, "
+    "CAST(sum(CAST(volume AS DECIMAL(38,6))) AS DOUBLE) AS volume"
+)
+_ROLLUP = (
+    f"SELECT symbol_clean, dt AS trade_date, {_BAR}, CAST(sum(CAST(close AS "
+    "DECIMAL(38,6))) AS DOUBLE) / count(close) AS avg_price, count(*) AS num_records "
+    "FROM silver WHERE {} GROUP BY symbol_clean, dt"
+)
+_PCT = "CASE WHEN open <> 0 THEN ({}) / open * 100.0 ELSE 0.0 END"
+_SUMMARY = (
+    f"SELECT *, close - open AS price_change, {_PCT.format('close - open')} AS "
+    f"price_change_percent, high - low AS daily_range, {_PCT.format('high - low')} AS "
+    f"volatility_percent FROM ({_ROLLUP.format('dt = ?')})"
+)
+_POINTS = (
+    "SELECT symbol_clean, timestamp_unix, open, high, low, close, volume, fetch_timestamp "
+    "FROM silver WHERE symbol_clean = ? AND dt BETWEEN ? AND ? QUALIFY row_number() OVER "
+    "(PARTITION BY symbol_clean, timestamp_unix ORDER BY {}) = 1"
+)
 
 
 def test_explode_and_dedup(spark, raw_dir):
@@ -188,7 +284,7 @@ def test_silver_overwrite_static_when_fresh_dynamic_on_rerun(spark, raw_dir, tmp
     }
 
 
-def test_analytics_queries(silver):
+def test_analytics_queries(spark, silver, silver_path, edge_path):
     st = symbol_stats(silver, "RELIANCE", "2024-01-01").collect()
     assert len(st) == 1 and st[0]["num_records"] == 75
     ds = daily_summary(silver, "2024-01-01").collect()
@@ -201,8 +297,64 @@ def test_analytics_queries(silver):
     assert lp["INFY"]["latest_price"] == lp["INFY"]["close"]
     assert available_symbols(silver).count() == 3
 
+    # every request against its DuckDB twin over the same files
+    for path, sym in ((silver_path, "TCS"), (edge_path, "REV")):
+        s, con, d0, d1 = spark.read.parquet(path), _duck(path), "2024-01-01", "2024-01-02"
+        for q in (sym, "O'X", "NOPE"):
+            where = "symbol_clean = ? AND dt = ?"
+            _matches(con, symbol_stats(s, q, d0), _ROLLUP.format(where), q, d0)
+            where = "symbol_clean = ? AND dt BETWEEN ? AND ?"
+            got = _matches(con, date_range_stats(s, q, d0, d1), _ROLLUP.format(where), q, d0, d1)
+            assert [r["trade_date"] for r in got] == sorted(r["trade_date"] for r in got)
+        for d in (d0, d1):
+            got = _matches(con, daily_summary(s, d), _SUMMARY, d)
+            pct = [r["price_change_percent"] for r in got]
+            assert got and pct == sorted(pct, reverse=True)
+            gainers, losers = top_movers_summary(s, d, limit=2)
+            _matches(con, gainers, f"{_SUMMARY} ORDER BY price_change_percent DESC LIMIT 2", d)
+            _matches(con, losers, f"{_SUMMARY} ORDER BY price_change_percent LIMIT 2", d)
+        _matches(con, latest_prices(s), "SELECT symbol_clean, max(timestamp_unix) AS "
+                 "timestamp_unix, arg_max(close, timestamp_unix) AS latest_price FROM silver "
+                 "GROUP BY symbol_clean")
 
-def test_ohlcv_endpoint_resample_and_limit(silver):
+    edge = spark.read.parquet(edge_path)
+    zero = {r["symbol_clean"]: r for r in daily_summary(edge, "2024-01-01").collect()}["ZERO"]
+    assert zero["open"] == 0.0 and zero["price_change_percent"] == 0.0
+    assert zero["volatility_percent"] == 0.0
+    assert symbol_stats(edge, "O'X", "2024-01-01").first()["num_records"] == 2
+    # an unknown or hostile symbol: no rows, the columns of a known one
+    for q in ("NOPE", "REV' OR '1' = '1"):
+        assert symbol_stats(edge, q, "2024-01-01").collect() == []
+        assert date_range_stats(edge, q, "2024-01-01", "2024-01-02").collect() == []
+    assert symbol_stats(edge, "NOPE", "2024-01-01").columns == [
+        "symbol_clean", "trade_date", "open", "high", "low", "close", "volume",
+        "avg_price", "num_records",
+    ]
+    # a request leaves a cached silver cached
+    cached = spark.read.parquet(edge_path).cache()
+    try:
+        cached.count()
+        symbol_stats(cached, "REV", "2024-01-01").collect()
+        assert cached.storageLevel.useMemory
+    finally:
+        cached.unpersist()
+
+
+def test_historical_lookback_cutoff(spark, edge_path):
+    """``3m`` looks back 90 days, and a candle exactly at the cutoff is in."""
+    edge, con = spark.read.parquet(edge_path), _duck(edge_path)
+    now = dt.datetime.fromtimestamp(T0 + 300, dt.timezone.utc) + dt.timedelta(days=90)
+    got = _matches(con, historical_lookback(edge, "REV", "3m", now),
+                   "SELECT symbol_clean, timestamp_unix, close, fetch_timestamp FROM silver "
+                   "WHERE symbol_clean = 'REV' AND timestamp_unix >= ?", T0 + 300)
+    ts = [r["timestamp_unix"] for r in got]
+    assert ts[0] == T0 + 300 and ts == sorted(ts) and len(ts) == 12
+    later = now + dt.timedelta(seconds=1)
+    assert historical_lookback(edge, "REV", "3m", later).first()["timestamp_unix"] == T0 + 600
+    assert historical_lookback(edge, "NOPE", "3m", now).collect() == []
+
+
+def test_ohlcv_endpoint_resample_and_limit(spark, silver, silver_path, edge_path):
     base = ohlcv_endpoint(silver, "RELIANCE", interval="5m")
     assert base.count() == 150
     res = ohlcv_endpoint(silver, "RELIANCE", interval="1h").collect()
@@ -213,6 +365,49 @@ def test_ohlcv_endpoint_resample_and_limit(silver):
     # tail semantics: ascending output, the LAST 10 candles
     alltimes = [r["timestamp_iso"] for r in base.orderBy("timestamp_iso").collect()]
     assert [r["timestamp_iso"] for r in limited] == alltimes[-10:]
+
+    # against DuckDB: dedup direction, tie-break order, range, resample, limit
+    edge = spark.read.parquet(edge_path)
+    for s, path, sym, order in (
+        (silver, silver_path, "TCS", "fetch_timestamp {0}"),
+        (edge, edge_path, "REV", "_file_seq {0}, fetch_timestamp {0}"),
+        (edge.drop("_file_seq"), edge_path, "REV", "fetch_timestamp {0}"),
+    ):
+        con = _duck(path)
+        requests = [(sym, "2024-01-02", "2024-01-02")] + [
+            (q, "2024-01-01", "2024-01-02") for q in (sym, "O'X", "NOPE")
+        ]
+        for (q, d0, d1), keep in [(r, k) for r in requests for k in ("last", "first")]:
+            pts = _POINTS.format(order.format("DESC" if keep == "last" else "ASC"))
+            got = _matches(con, ohlcv_endpoint(s, q, d0, d1, dedup=keep), pts, q, d0, d1)
+            assert [r["timestamp_iso"] for r in got] == sorted(r["timestamp_iso"] for r in got)
+            assert {r["symbol_clean"] for r in got} <= {q}
+            _matches(con, ohlcv_endpoint(s, q, d0, d1, limit=4, dedup=keep),
+                     f"{pts} ORDER BY timestamp_unix DESC LIMIT 4", q, d0, d1)
+            interval, w = ("15m", 900) if keep == "last" else ("1h", 3600)
+            bars = (f"SELECT symbol_clean, (timestamp_unix // {w}) * {w} AS timestamp_iso, "
+                    f"{_BAR} FROM ({pts}) GROUP BY symbol_clean, timestamp_unix // {w}")
+            _matches(con, ohlcv_endpoint(s, q, d0, d1, interval, dedup=keep), bars, q, d0, d1)
+            _matches(con, ohlcv_endpoint(s, q, d0, d1, interval, limit=1, dedup=keep),
+                     f"{bars} ORDER BY timestamp_iso DESC LIMIT 1", q, d0, d1)
+    # REV at T0: the later fetch wins under "last", the earlier under
+    # "first"; at T0+300 the file sequence outranks the fetch time
+    for s, want in ((edge, (101.5, 107.5, 105.0, 106.0)),
+                    (edge.drop("_file_seq"), (101.5, 106.0, 105.0, 107.5))):
+        got = tuple(
+            r["close"] for keep in ("last", "first")
+            for r in ohlcv_endpoint(s, "REV", limit=1000, dedup=keep).collect()[:2]
+        )
+        assert got == want
+    assert ohlcv_endpoint(edge, "NOPE").columns == edge.columns
+    assert (ohlcv_endpoint(edge, "NOPE", interval="15m").columns
+            == ohlcv_endpoint(edge, "REV", interval="15m").columns)
+    assert [r["close"] for r in ohlcv_endpoint(edge, "O'X").collect()] == [51.0, 54.0]
+    for bad in ({"dedup": "middle"}, {"interval": "0m"}, {"limit": -1}):
+        with pytest.raises(ValueError):
+            ohlcv_endpoint(edge, "REV", **bad)
+    with pytest.raises(TypeError):
+        ohlcv_endpoint(edge, "REV", limit="5")
 
 
 def test_declared_sql_queries(spark, silver):

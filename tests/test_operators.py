@@ -52,25 +52,26 @@ def test_daily_rollup_ordered_first_last(candles):
     assert out[("B", "2024-01-01")]["open"] == 50.0
 
 
-def test_ohlcv_daily_rollup_uses_own_columns(spark):
+def test_symbol_stats_uses_own_columns(spark):
     """Parity pin (analytics/lambda_analytics.py:146-166): day open is the
     FIRST row's OPEN column, day close the LAST row's CLOSE column — not
     first/last of a single price series."""
-    from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.operators.rollup import (
-        ohlcv_daily_rollup,
+    from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.plans.analytics import (
+        symbol_stats,
     )
 
     rows = [
-        # symbol, ts, epoch, open, high, low, close, volume
-        ("A", ts("2024-01-01 09:15:00"), 1, 100.0, 106.0, 99.0, 104.0, 10),
-        ("A", ts("2024-01-01 09:20:00"), 2, 104.0, 105.0, 98.0, 101.0, 20),
+        # symbol, ts, epoch, open, high, low, close, volume, year, month, day
+        ("A", ts("2024-01-01 09:15:00"), 1, 100.0, 106.0, 99.0, 104.0, 10, 2024, 1, 1),
+        ("A", ts("2024-01-01 09:20:00"), 2, 104.0, 105.0, 98.0, 101.0, 20, 2024, 1, 1),
     ]
     df = spark.createDataFrame(
         rows,
-        "symbol string, timestamp_iso timestamp, timestamp_unix long, "
-        "open double, high double, low double, close double, volume long",
+        "symbol_clean string, timestamp_iso timestamp, timestamp_unix long, "
+        "open double, high double, low double, close double, volume long, "
+        "year int, month int, day int",
     )
-    r = ohlcv_daily_rollup(df, ["symbol"]).collect()[0]
+    r = symbol_stats(df, "A", "2024-01-01").collect()[0]
     assert r["open"] == 100.0      # first OPEN, not first close (104)
     assert r["close"] == 101.0     # last CLOSE, not last open (104)
     assert r["high"] == 106.0 and r["low"] == 98.0

@@ -48,10 +48,9 @@ def test_topk_is_take_ordered(spark, sf_dir):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_partition_pruning_on_silver(spark, tmp_path):
-    from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.plans.analytics import (
-        symbol_stats,
-    )
+@pytest.fixture(scope="module")
+def api_silver(spark, tmp_path_factory):
+    """Two symbols x two days of ETL silver, partitioned by (symbol_clean, dt)."""
     from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.plans.etl import (
         bronze_to_silver,
         write_silver,
@@ -63,17 +62,60 @@ def test_partition_pruning_on_silver(spark, tmp_path):
         read_raw_envelopes,
     )
 
-    raw_dir = tmp_path / "raw"
-    raw_dir.mkdir()
-    write_mock_envelope_files(spark, str(raw_dir), ["NSE:RELIANCE-EQ", "NSE:TCS-EQ"], days=2)
-    silver_path = str(tmp_path / "silver")
-    write_silver(bronze_to_silver(read_raw_envelopes(spark, str(raw_dir))), silver_path)
-    silver = spark.read.parquet(silver_path)
-    plan = physical(symbol_stats(silver, "RELIANCE", "2024-01-01"))
+    raw_dir = str(tmp_path_factory.mktemp("raw"))
+    write_mock_envelope_files(spark, raw_dir, ["NSE:RELIANCE-EQ", "NSE:TCS-EQ"], days=2)
+    silver_path = str(tmp_path_factory.mktemp("silver"))
+    write_silver(bronze_to_silver(read_raw_envelopes(spark, raw_dir)), silver_path)
+    return spark.read.parquet(silver_path)
+
+
+def test_partition_pruning_on_silver(api_silver):
+    from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.plans.analytics import (
+        symbol_stats,
+    )
+
+    plan = physical(symbol_stats(api_silver, "RELIANCE", "2024-01-01"))
     # the (symbol_clean, dt) predicate must land in PartitionFilters,
     # not a post-scan Filter
     pf = plan.split("PartitionFilters:")[1][:400]
     assert "symbol_clean" in pf and "dt" in pf
+
+
+@pytest.mark.parametrize(
+    "shape", ["point_5m_limit", "point_range_15m", "symbol_stats", "date_range", "lookback"]
+)
+def test_one_symbol_request_is_one_stage(spark, api_silver, shape):
+    """A one-symbol request plans no Exchange (its pruned scan is coalesced
+    to one partition), and its scan prunes on symbol_clean, plus dt when
+    the request names dates."""
+    import datetime as dt
+
+    from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.plans import (
+        analytics as A,
+    )
+
+    now = dt.datetime(2024, 1, 2, 6, tzinfo=dt.timezone.utc)
+    df = {
+        "point_5m_limit": lambda s: A.ohlcv_endpoint(s, "TCS", interval="5m", limit=20),
+        "point_range_15m": lambda s: A.ohlcv_endpoint(
+            s, "TCS", "2024-01-01", "2024-01-02", interval="15m"
+        ),
+        "symbol_stats": lambda s: A.symbol_stats(s, "TCS", "2024-01-01"),
+        "date_range": lambda s: A.date_range_stats(s, "TCS", "2024-01-01", "2024-01-02"),
+        "lookback": lambda s: A.historical_lookback(s, "TCS", "1d", now),
+    }[shape](api_silver)
+    key = "spark.sql.maxMetadataStringLength"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "10000")  # untruncated PartitionFilters
+    try:
+        plan = physical(df)
+    finally:
+        spark.conf.set(key, old)
+    assert "Exchange" not in plan, plan
+    pf = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
+    assert len(pf) == 1 and "(symbol_clean#" in pf[0], plan
+    assert ("(dt#" in pf[0]) == (shape != "point_5m_limit"), pf[0]
+    assert len(df.collect()) > 0
 
 
 def test_no_python_udfs_in_core_queries(spark, sf_dir):

@@ -15,11 +15,9 @@ from pyspark.sql import types as T
 from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.operators.dedup import (
     dedup_by_key,
 )
-from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.operators.resample import (
-    resample_candles,
-)
-from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.operators.rollup import (
-    ohlcv_daily_rollup,
+from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.plans.analytics import (
+    ohlcv_endpoint,
+    symbol_stats,
 )
 from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.plans.etl import (
     quality_filter,
@@ -30,8 +28,9 @@ _FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures")
 SAMPLE = os.path.join(_FIXTURES, "test_sample.csv.gz")
 RELIANCE = os.path.join(_FIXTURES, "reliance.csv.gz")
 
-# the flat silver files carry all 16 columns in-file (no partition dirs)
-_FLAT = T.StructType([f for f in SILVER_SCHEMA.fields])
+# the flat silver files carry 16 columns in-file: all but the ``dt``
+# partition column (CSV columns bind by position)
+_FLAT = T.StructType([f for f in SILVER_SCHEMA.fields if f.name != "dt"])
 
 
 def _read(spark, path):
@@ -42,7 +41,8 @@ def test_clean_sample_rollup(spark):
     df = _read(spark, SAMPLE)
     assert df.count() == 35
     assert quality_filter(df).count() == 35  # captured data passes DQ
-    r = ohlcv_daily_rollup(df, ["symbol_clean"]).collect()[0]
+    # no ``dt`` column: the request filters the day on year/month/day
+    r = symbol_stats(df, "RELIANCE", "2025-10-08").collect()[0]
     head = df.orderBy("timestamp_unix").first()
     tail = df.orderBy(F.col("timestamp_unix").desc()).first()
     assert r["open"] == head["open"] and r["close"] == tail["close"]
@@ -70,18 +70,12 @@ def test_duplicate_fixture_dedup_directions(spark):
 
 
 def test_resample_real_day_to_hourly(spark):
-    df = dedup_by_key(
-        _read(spark, RELIANCE),
-        ["symbol_clean", "timestamp_unix"],
-        ["fetch_timestamp", "processed_at"],
-        keep="last",
-    )
-    hourly = resample_candles(
-        df, 60, ["symbol_clean"], "timestamp_iso", tiebreak="timestamp_unix"
-    ).collect()
+    df = _read(spark, RELIANCE)
+    candles = ohlcv_endpoint(df, "RELIANCE")  # 5m, the last fetch of each candle
+    hourly = ohlcv_endpoint(df, "RELIANCE", interval="1h").collect()
     assert 1 <= len(hourly) <= 7  # one NSE session fits in <=7 hour buckets
     total = sum(r["volume"] for r in hourly)
-    assert total == df.agg(F.sum("volume")).collect()[0][0]  # volume conserved
+    assert total == candles.agg(F.sum("volume")).collect()[0][0]  # volume conserved
     for r in hourly:
         assert r["low"] <= r["open"] <= r["high"]
         assert r["low"] <= r["close"] <= r["high"]

@@ -105,8 +105,8 @@ def test_upsert_sink_overlapping_rerun_idempotent(spark, raw_dir, tmp_path_facto
 def test_streaming_resample_matches_batch(spark, raw_dir, tmp_path_factory):
     """ST4: the streaming tumbling-window resample must equal the batch
     resample on the same data once all windows close."""
-    from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.operators.resample import (
-        resample_candles,
+    from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.plans.analytics import (
+        ohlcv_endpoint,
     )
     from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.plans.etl import (
         bronze_to_silver,
@@ -133,10 +133,9 @@ def test_streaming_resample_matches_batch(spark, raw_dir, tmp_path_factory):
     }
     batch_silver = bronze_to_silver(read_raw_envelopes(spark, raw_dir), dedup="last")
     batch = {
-        (r["symbol_clean"], str(r["bucket_start"])): (r["open"], r["close"], int(r["volume"]))
-        for r in resample_candles(
-            batch_silver, 60, ["symbol_clean"], "timestamp_iso", tiebreak="timestamp_unix"
-        ).collect()
+        (r["symbol_clean"], str(r["timestamp_iso"])): (r["open"], r["close"], int(r["volume"]))
+        for s in SYMBOLS
+        for r in ohlcv_endpoint(batch_silver, s[4:-3], interval="60m").collect()
     }
     assert streamed == batch
 
