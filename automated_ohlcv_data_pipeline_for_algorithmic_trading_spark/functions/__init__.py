@@ -6,6 +6,7 @@ from .candles import (  # noqa: F401
     with_calendar_cols,
     iso_utc,
     price_change_cols,
+    price_change_sql,
     coalesce_aliases,
     epoch_any_unit,
 )

@@ -72,24 +72,25 @@ def iso_utc(ts: ColumnOrName) -> Column:
     return F.date_format(_col(ts), "yyyy-MM-dd'T'HH:mm:ss'Z'")
 
 
+def price_change_sql(open_col: str = "open", close_col: str = "close",
+                     high_col: str = "high", low_col: str = "low") -> list[str]:
+    """F8 — derived price columns as Spark SQL select items, with the
+    zero-open guard (the lightweight analytics variant guards division by
+    zero, analytics/lambda_analytics_lightweight.py:136 — we always guard)."""
+    o, c, h, low = open_col, close_col, high_col, low_col
+    pct = "CASE WHEN {o} != 0 THEN ({d}) / {o} * 100.0D ELSE 0.0D END AS {name}"
+    return [
+        f"{c} - {o} AS price_change",
+        pct.format(o=o, d=f"{c} - {o}", name="price_change_percent"),
+        f"{h} - {low} AS daily_range",
+        pct.format(o=o, d=f"{h} - {low}", name="volatility_percent"),
+    ]
+
+
 def price_change_cols(df: DataFrame, open_col: str = "open", close_col: str = "close",
                       high_col: str = "high", low_col: str = "low") -> DataFrame:
-    """F8 — derived price columns with the zero-open guard (the lightweight
-    analytics variant guards division by zero,
-    analytics/lambda_analytics_lightweight.py:136 — we always guard)."""
-    o, c, h, low = (F.col(x) for x in (open_col, close_col, high_col, low_col))
-    return (
-        df.withColumn("price_change", c - o)
-        .withColumn(
-            "price_change_percent",
-            F.when(o != 0, (c - o) / o * 100.0).otherwise(F.lit(0.0)),
-        )
-        .withColumn("daily_range", h - low)
-        .withColumn(
-            "volatility_percent",
-            F.when(o != 0, (h - low) / o * 100.0).otherwise(F.lit(0.0)),
-        )
-    )
+    """F8 — ``df`` plus the :func:`price_change_sql` columns."""
+    return df.selectExpr("*", *price_change_sql(open_col, close_col, high_col, low_col))
 
 
 def coalesce_aliases(df: DataFrame, target: str, aliases: Sequence[str]) -> DataFrame:

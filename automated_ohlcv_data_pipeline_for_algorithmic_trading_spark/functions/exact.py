@@ -147,13 +147,14 @@ def sql_davg(expr: str) -> str:
     return f"CAST(sum(CAST(({expr}) AS DECIMAL(38,6))) AS DOUBLE) / count({expr})"
 
 
-def dsum_sql(expr: str) -> str:
-    """:func:`dsum` as Spark SQL text under the current mode."""
+def mode_sum_sql(expr: str) -> str:
+    """:func:`dsum` as Spark SQL text under the current ``EXACT_MODE``
+    (``sql_dsum`` is always the exact form, for the DuckDB oracles)."""
     return sql_dsum(expr) if EXACT_MODE else f"sum({expr})"
 
 
-def davg_sql(expr: str) -> str:
-    """:func:`davg` as Spark SQL text under the current mode."""
+def mode_avg_sql(expr: str) -> str:
+    """:func:`davg` as Spark SQL text under the current ``EXACT_MODE``."""
     return sql_davg(expr) if EXACT_MODE else f"avg({expr})"
 
 

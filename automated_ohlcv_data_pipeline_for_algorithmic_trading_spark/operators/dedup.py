@@ -11,8 +11,19 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def dedup_rank_sql(keys: Sequence[str], order_cols: Sequence[str], keep: str = "last") -> str:
+    """The Spark SQL rank that :func:`dedup_by_key` keeps at 1: per key,
+    row_number() over ``order_cols`` descending for ``last``, ascending
+    for ``first``."""
+    if keep not in ("first", "last"):
+        raise ValueError(f"keep must be 'first' or 'last', got {keep!r}")
+    direction = "ASC" if keep == "first" else "DESC"
+    order = ", ".join(f"{c} {direction}" for c in order_cols)
+    return f"row_number() OVER (PARTITION BY {', '.join(keys)} ORDER BY {order})"
 
 
 def dedup_by_key(
@@ -31,15 +42,9 @@ def dedup_by_key(
     "groups are small" case this is the same single shuffle an
     aggregation would take. AQE handles skewed keys.
     """
-    if keep not in ("first", "last"):
-        raise ValueError(f"keep must be 'first' or 'last', got {keep!r}")
     order_cols = [order_col] if isinstance(order_col, str) else list(order_col)
-    ordering = [
-        F.col(c).asc() if keep == "first" else F.col(c).desc() for c in order_cols
-    ]
-    w = Window.partitionBy(*keys).orderBy(*ordering)
     return (
-        df.withColumn("_rn", F.row_number().over(w))
+        df.withColumn("_rn", F.expr(dedup_rank_sql(keys, order_cols, keep)))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )

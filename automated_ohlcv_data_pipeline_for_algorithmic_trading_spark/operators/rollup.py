@@ -24,10 +24,16 @@ from pyspark.sql import functions as F
 from ..functions.exact import davg, dstddev, dsum
 
 
-def _order_key(ts_col: str, tiebreak: str | None) -> Column:
-    if tiebreak:
-        return F.struct(F.col(ts_col), F.col(tiebreak))
-    return F.col(ts_col)
+def order_key_sql(ts_col: str, tiebreak: str | None = None) -> str:
+    """The min_by/max_by order of a row as Spark SQL: ``ts_col``, or
+    ``struct(ts_col, tiebreak)``."""
+    return f"struct({ts_col}, {tiebreak})" if tiebreak else ts_col
+
+
+def latest_row_sql(ts_col: str, tiebreak: str | None = None) -> str:
+    """A9 as a Spark SQL aggregate: the latest full row of a group, as a
+    struct of all columns."""
+    return f"max_by(struct(*), {order_key_sql(ts_col, tiebreak)})"
 
 
 def series_rollup(
@@ -46,7 +52,7 @@ def series_rollup(
     analytics/lambda_analytics_lightweight.py:113-148 (pure python),
     sql/athena_parquet_tables.sql:90-102 (SQL GROUP BY).
     """
-    p, key = F.col(price_col), _order_key(ts_col, tiebreak)
+    p, key = F.col(price_col), F.expr(order_key_sql(ts_col, tiebreak))
     aggs = [
         F.min_by(p, key).alias("open"),
         F.max(p).alias("high"),
@@ -120,9 +126,7 @@ def latest_snapshot(
     per-key sort — the scalable plan for "latest row per key" over
     billions of rows.
     """
-    key = _order_key(ts_col, tiebreak)
-    payload = F.struct(*[F.col(c) for c in df.columns])
-    out = df.groupBy(*keys).agg(F.max_by(payload, key).alias("_row"))
+    out = df.groupBy(*keys).agg(F.expr(latest_row_sql(ts_col, tiebreak)).alias("_row"))
     return out.select(*[F.col(f"_row.{c}").alias(c) for c in df.columns])
 
 

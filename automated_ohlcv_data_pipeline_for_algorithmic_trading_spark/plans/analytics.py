@@ -7,12 +7,14 @@ Each request is ONE lazy ``spark.sql`` statement over the silver DataFrame:
 one parse, not dozens of py4j calls. PySpark's ``{}`` formatter binds the
 request values (symbol, dates) as escaped SQL literals; ``interval`` and
 ``limit`` enter the text as validated ints. Pruning on (symbol_clean, dt)
-replaces the reference's hand-built S3 prefixes (SS4). A one-symbol request
+replaces the reference's hand-built S3 prefixes (SS4).
+
+A one-symbol request whose dates span at most ``_ONE_TASK_DAYS`` days
 coalesces its pruned scan to one partition before the dedup window, the
-aggregate and the sort, so it plans no Exchange and runs as one task, which
-the request bounds: one symbol's directories within the requested dates, or
-without dates one symbol's history (~19k 5-minute candles a year).
-All-symbol requests keep their shuffle.
+aggregate and the sort: no Exchange, one task. That task reads the symbol's
+daily files one after another, so an undated or longer request keeps the
+parallel scan and its shuffle (sized in ROADMAP.md, "Candle API read
+path"). All-symbol requests keep their shuffle.
 """
 
 from __future__ import annotations
@@ -24,17 +26,35 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.exact import davg_sql, dsum_sql
+from ..functions.candles import price_change_sql
+from ..functions.exact import mode_avg_sql, mode_sum_sql
 from ..functions.timeparse import interval_to_minutes, period_to_timedelta
+from ..operators.dedup import dedup_rank_sql
+from ..operators.rollup import latest_row_sql, order_key_sql
 from ..operators.topk import top_movers
 
 _SILVER = "SELECT * FROM IDENTIFIER({silver}) WHERE "
-_ONE_SYMBOL = "SELECT /*+ COALESCE(1) */ * FROM IDENTIFIER({silver}) WHERE symbol_clean = {symbol}"
+
+#: The longest request, in days of ``dt`` directories, read by one task: on
+#: a 250-trading-day silver one task won up to ~90 days and lost over a year.
+_ONE_TASK_DAYS = 92
+
+
+def _one_symbol(days: int | None) -> str:
+    """The symbol's rows: one partition when the request spans at most
+    ``_ONE_TASK_DAYS`` days (``None``: not bounded), else the parallel scan."""
+    hint = "/*+ COALESCE(1) */ " if days is not None and days <= _ONE_TASK_DAYS else ""
+    return f"SELECT {hint}* FROM IDENTIFIER({{silver}}) WHERE symbol_clean = {{symbol}}"
 
 
 def _sql(silver: DataFrame, text: str, **values: str | int) -> DataFrame:
     """One statement: ``{silver}`` names ``silver``; any other ``{name}`` is
-    the SQL literal of ``values[name]``, a str or an int."""
+    the SQL literal of ``values[name]``, a str or an int.
+
+    The view is dropped through the JVM session catalog
+    (``sessionState().catalog()``), an internal API checked on Spark 4.1.2
+    and absent under Spark Connect; ``test_analytics_queries`` asserts that
+    a cached silver stays cached, which guards it."""
     if any(isinstance(v, bool) or not isinstance(v, (str, int)) for v in values.values()):
         raise TypeError(f"request values must be str or int, got {values!r}")
     spark, view = silver.sparkSession, f"_silver_{uuid.uuid4().hex}"
@@ -54,25 +74,29 @@ def _day(silver: DataFrame, date: str) -> tuple[str, dict]:
     return where, {"date": d.isoformat(), "y": d.year, "m": d.month, "d": d.day}
 
 
-def _range(silver: DataFrame, from_date: str | None, to_date: str | None) -> tuple[str, dict]:
+def _range(
+    silver: DataFrame, from_date: str | None, to_date: str | None
+) -> tuple[str, dict, int | None]:
     """`` AND ``-joined inclusive day bounds on the candle time, repeated on
-    ``dt`` (when present) to prune directories."""
+    ``dt`` (when present) to prune directories, and the days they span
+    (``None`` unless both are given)."""
     cols = ["to_date(timestamp_iso)"] + (["dt"] if "dt" in silver.columns else [])
-    where, values = "", {}
+    where, values, span = "", {}, []
     for name, op, date in (("lo", ">=", from_date), ("hi", "<=", to_date)):
         if date:
-            values[name] = dt.date.fromisoformat(date).isoformat()
+            span.append(dt.date.fromisoformat(date))
+            values[name] = span[-1].isoformat()
             where += "".join(f" AND {c} {op} {{{name}}}" for c in cols)
-    return where, values
+    return where, values, (span[1] - span[0]).days + 1 if len(span) == 2 else None
 
 
 def _bar() -> str:
     """The OHLCV bar of a candle group: open of the first candle by
     (timestamp_iso, timestamp_unix), close of the last, exact volume sum."""
-    key = "struct(timestamp_iso, timestamp_unix)"
+    key = order_key_sql("timestamp_iso", "timestamp_unix")
     return (
         f"min_by(open, {key}) AS open, max(high) AS high, min(low) AS low, "
-        f"max_by(close, {key}) AS close, {dsum_sql('volume')} AS volume"
+        f"max_by(close, {key}) AS close, {mode_sum_sql('volume')} AS volume"
     )
 
 
@@ -81,7 +105,7 @@ def _rollup(rows: str) -> str:
     num_records (analytics/lambda_analytics.py:146-166)."""
     return (
         f"SELECT symbol_clean, to_date(timestamp_iso) AS trade_date, {_bar()}, "
-        f"{davg_sql('close')} AS avg_price, count(1) AS num_records "
+        f"{mode_avg_sql('close')} AS avg_price, count(1) AS num_records "
         f"FROM ({rows}) GROUP BY symbol_clean, to_date(timestamp_iso)"
     )
 
@@ -90,7 +114,7 @@ def symbol_stats(silver: DataFrame, symbol_clean: str, date: str) -> DataFrame:
     """query_type=symbol_stats — one symbol, one day, the A1 rollup
     (analytics/lambda_analytics.py:99-207)."""
     where, values = _day(silver, date)
-    return _sql(silver, _rollup(f"{_ONE_SYMBOL} AND {where}"), symbol=symbol_clean, **values)
+    return _sql(silver, _rollup(f"{_one_symbol(1)} AND {where}"), symbol=symbol_clean, **values)
 
 
 def daily_summary(silver: DataFrame, date: str) -> DataFrame:
@@ -98,11 +122,8 @@ def daily_summary(silver: DataFrame, date: str) -> DataFrame:
     price-change columns (zero-open guarded), by pct desc
     (analytics/lambda_analytics.py:210-321)."""
     where, values = _day(silver, date)
-    pct = "CASE WHEN open != 0 THEN ({}) / open * 100.0 ELSE 0.0 END AS {}"
     return _sql(silver, (
-        f"SELECT *, close - open AS price_change, "
-        f"{pct.format('close - open', 'price_change_percent')}, high - low AS daily_range, "
-        f"{pct.format('high - low', 'volatility_percent')} FROM ({_rollup(_SILVER + where)}) "
+        f"SELECT *, {', '.join(price_change_sql())} FROM ({_rollup(_SILVER + where)}) "
         "ORDER BY price_change_percent DESC"
     ), **values)
 
@@ -113,8 +134,8 @@ def date_range_stats(
     """query_type=date_range — per-day rollups across a range; the
     reference loops days sequentially (analytics/lambda_analytics.py:324-344),
     here it is one pruned scan + one aggregate."""
-    where, values = _range(silver, from_date, to_date)
-    text = _rollup(_ONE_SYMBOL + where) + " ORDER BY trade_date"
+    where, values, days = _range(silver, from_date, to_date)
+    text = _rollup(_one_symbol(days) + where) + " ORDER BY trade_date"
     return _sql(silver, text, symbol=symbol_clean, **values)
 
 
@@ -143,17 +164,15 @@ def ohlcv_endpoint(
     by timestamp, last (or first) by file sequence then fetch time ->
     optional resample -> asc sort, or the last ``limit`` rows ascending
     (api/api_handler.py:365-443, :654-743)."""
-    if dedup not in ("first", "last"):
-        raise ValueError(f"dedup must be 'first' or 'last', got {dedup!r}")
     minutes, n = interval_to_minutes(interval), operator.index(limit or 0)
     if minutes <= 0 or n < 0:
         raise ValueError(f"bad interval {interval!r} or limit {limit!r}")
-    where, values = _range(silver, from_date, to_date)
+    where, values, days = _range(silver, from_date, to_date)
     seq = ["_file_seq", "fetch_timestamp"] if "_file_seq" in silver.columns else ["fetch_timestamp"]
-    order = ", ".join(f"{c} {'DESC' if dedup == 'last' else 'ASC'}" for c in seq)
+    rank = dedup_rank_sql(["symbol_clean", "timestamp_unix"], seq, dedup)
     rows = (
-        "SELECT * EXCEPT (_rn) FROM (SELECT *, row_number() OVER (PARTITION BY symbol_clean, "
-        f"timestamp_unix ORDER BY {order}) AS _rn FROM ({_ONE_SYMBOL}{where})) WHERE _rn = 1"
+        f"SELECT * EXCEPT (_rn) FROM (SELECT *, {rank} AS _rn "
+        f"FROM ({_one_symbol(days)}{where})) WHERE _rn = 1"
     )
     if minutes != 5:
         rows = (
@@ -172,21 +191,24 @@ def historical_lookback(
     """GET /historical/{symbol}?period=3m — candles at or after ``now``
     minus the period, with the reference's 30d/365d month/year
     approximations (api/api_handler.py:746-769); ``now`` is explicit for
-    determinism (a naive one is local time, as ``F.lit`` reads it)."""
-    cutoff = round((now - period_to_timedelta(period)).timestamp() * 1_000_000)
+    determinism (a naive one is local time, as ``F.lit`` reads it). The
+    request spans the period, as the reference's ``now`` is the present."""
+    back = period_to_timedelta(period)
+    cutoff = round((now - back).timestamp() * 1_000_000)
     where = " AND timestamp_iso >= timestamp_micros({cutoff})"
     if "dt" in silver.columns:
         where += " AND dt >= to_date(timestamp_micros({cutoff}))"
-    text = f"{_ONE_SYMBOL}{where} ORDER BY timestamp_iso"
+    text = f"{_one_symbol(back.days + 1)}{where} ORDER BY timestamp_iso"
     return _sql(silver, text, symbol=symbol_clean, cutoff=cutoff)
 
 
 def latest_prices(silver: DataFrame) -> DataFrame:
     """GET /latest — the last candle per symbol by (timestamp_iso,
     timestamp_unix), latest_price = its close (api/api_handler.py:479-514)."""
+    latest = latest_row_sql("timestamp_iso", "timestamp_unix")
     return _sql(silver, (
-        "SELECT r.*, r.close AS latest_price FROM (SELECT max_by(struct(*), struct("
-        "timestamp_iso, timestamp_unix)) AS r FROM IDENTIFIER({silver}) GROUP BY symbol_clean)"
+        f"SELECT r.*, r.close AS latest_price FROM (SELECT {latest} AS r "
+        "FROM IDENTIFIER({silver}) GROUP BY symbol_clean)"
     ))
 
 

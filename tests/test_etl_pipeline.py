@@ -306,6 +306,8 @@ def test_analytics_queries(spark, silver, silver_path, edge_path):
             where = "symbol_clean = ? AND dt BETWEEN ? AND ?"
             got = _matches(con, date_range_stats(s, q, d0, d1), _ROLLUP.format(where), q, d0, d1)
             assert [r["trade_date"] for r in got] == sorted(r["trade_date"] for r in got)
+        long = (sym, "2023-12-01", "2024-03-31")  # over 92 days: the parallel scan
+        _matches(con, date_range_stats(s, *long), _ROLLUP.format(where), *long)
         for d in (d0, d1):
             got = _matches(con, daily_summary(s, d), _SUMMARY, d)
             pct = [r["price_change_percent"] for r in got]
@@ -374,22 +376,24 @@ def test_ohlcv_endpoint_resample_and_limit(spark, silver, silver_path, edge_path
         (edge.drop("_file_seq"), edge_path, "REV", "fetch_timestamp {0}"),
     ):
         con = _duck(path)
+        # one task: a day, two days; the parallel scan: no dates, 122 days
         requests = [(sym, "2024-01-02", "2024-01-02")] + [
             (q, "2024-01-01", "2024-01-02") for q in (sym, "O'X", "NOPE")
-        ]
+        ] + [(sym, None, None), (sym, "2023-12-01", "2024-03-31")]
         for (q, d0, d1), keep in [(r, k) for r in requests for k in ("last", "first")]:
             pts = _POINTS.format(order.format("DESC" if keep == "last" else "ASC"))
-            got = _matches(con, ohlcv_endpoint(s, q, d0, d1, dedup=keep), pts, q, d0, d1)
+            args = (q, d0 or "1970-01-01", d1 or "2099-12-31")
+            got = _matches(con, ohlcv_endpoint(s, q, d0, d1, dedup=keep), pts, *args)
             assert [r["timestamp_iso"] for r in got] == sorted(r["timestamp_iso"] for r in got)
             assert {r["symbol_clean"] for r in got} <= {q}
             _matches(con, ohlcv_endpoint(s, q, d0, d1, limit=4, dedup=keep),
-                     f"{pts} ORDER BY timestamp_unix DESC LIMIT 4", q, d0, d1)
+                     f"{pts} ORDER BY timestamp_unix DESC LIMIT 4", *args)
             interval, w = ("15m", 900) if keep == "last" else ("1h", 3600)
             bars = (f"SELECT symbol_clean, (timestamp_unix // {w}) * {w} AS timestamp_iso, "
                     f"{_BAR} FROM ({pts}) GROUP BY symbol_clean, timestamp_unix // {w}")
-            _matches(con, ohlcv_endpoint(s, q, d0, d1, interval, dedup=keep), bars, q, d0, d1)
+            _matches(con, ohlcv_endpoint(s, q, d0, d1, interval, dedup=keep), bars, *args)
             _matches(con, ohlcv_endpoint(s, q, d0, d1, interval, limit=1, dedup=keep),
-                     f"{bars} ORDER BY timestamp_iso DESC LIMIT 1", q, d0, d1)
+                     f"{bars} ORDER BY timestamp_iso DESC LIMIT 1", *args)
     # REV at T0: the later fetch wins under "last", the earlier under
     # "first"; at T0+300 the file sequence outranks the fetch time
     for s, want in ((edge, (101.5, 107.5, 105.0, 106.0)),

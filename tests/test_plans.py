@@ -4,6 +4,7 @@ are the properties that make the operators survive a 100x scale-up."""
 
 from __future__ import annotations
 
+import datetime as dt
 import re
 
 import pytest
@@ -81,40 +82,74 @@ def test_partition_pruning_on_silver(api_silver):
     assert "symbol_clean" in pf and "dt" in pf
 
 
-@pytest.mark.parametrize(
-    "shape", ["point_5m_limit", "point_range_15m", "symbol_stats", "date_range", "lookback"]
-)
-def test_one_symbol_request_is_one_stage(spark, api_silver, shape):
-    """A one-symbol request plans no Exchange (its pruned scan is coalesced
-    to one partition), and its scan prunes on symbol_clean, plus dt when
-    the request names dates."""
-    import datetime as dt
+_NOW = dt.datetime(2024, 1, 2, 6, tzinfo=dt.timezone.utc)
 
-    from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.plans import (
-        analytics as A,
-    )
+#: One-symbol requests bounded to at most a quarter of days.
+_BOUNDED = {
+    "point_day_5m_limit": lambda A, s: A.ohlcv_endpoint(
+        s, "TCS", "2024-01-02", "2024-01-02", interval="5m", limit=20
+    ),
+    "point_range_15m": lambda A, s: A.ohlcv_endpoint(
+        s, "TCS", "2024-01-01", "2024-01-02", interval="15m"
+    ),
+    "symbol_stats": lambda A, s: A.symbol_stats(s, "TCS", "2024-01-01"),
+    "date_range": lambda A, s: A.date_range_stats(s, "TCS", "2024-01-01", "2024-01-02"),
+    "date_range_92d": lambda A, s: A.date_range_stats(s, "TCS", "2024-01-01", "2024-04-01"),
+    "lookback": lambda A, s: A.historical_lookback(s, "TCS", "1d", _NOW),
+}
 
-    now = dt.datetime(2024, 1, 2, 6, tzinfo=dt.timezone.utc)
-    df = {
-        "point_5m_limit": lambda s: A.ohlcv_endpoint(s, "TCS", interval="5m", limit=20),
-        "point_range_15m": lambda s: A.ohlcv_endpoint(
-            s, "TCS", "2024-01-01", "2024-01-02", interval="15m"
-        ),
-        "symbol_stats": lambda s: A.symbol_stats(s, "TCS", "2024-01-01"),
-        "date_range": lambda s: A.date_range_stats(s, "TCS", "2024-01-01", "2024-01-02"),
-        "lookback": lambda s: A.historical_lookback(s, "TCS", "1d", now),
-    }[shape](api_silver)
+#: One-symbol requests without dates or longer than a quarter.
+_UNBOUNDED = {
+    "point_5m_limit": lambda A, s: A.ohlcv_endpoint(s, "TCS", interval="5m", limit=20),
+    "point_from_15m": lambda A, s: A.ohlcv_endpoint(s, "TCS", "2024-01-01", interval="15m"),
+    "date_range_93d": lambda A, s: A.date_range_stats(s, "TCS", "2024-01-01", "2024-04-02"),
+    "lookback_1y": lambda A, s: A.historical_lookback(s, "TCS", "1y", _NOW),
+}
+
+
+def _api_plan(spark, df) -> tuple[str, str]:
+    """The physical plan of ``df`` and its one untruncated PartitionFilters."""
     key = "spark.sql.maxMetadataStringLength"
     old = spark.conf.get(key)
-    spark.conf.set(key, "10000")  # untruncated PartitionFilters
+    spark.conf.set(key, "10000")
     try:
         plan = physical(df)
     finally:
         spark.conf.set(key, old)
-    assert "Exchange" not in plan, plan
     pf = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert len(pf) == 1 and "(symbol_clean#" in pf[0], plan
-    assert ("(dt#" in pf[0]) == (shape != "point_5m_limit"), pf[0]
+    return plan, pf[0]
+
+
+@pytest.mark.parametrize("shape", list(_BOUNDED))
+def test_one_symbol_request_is_one_stage(spark, api_silver, shape):
+    """A one-symbol request over at most a quarter of days plans no
+    Exchange (its pruned scan is coalesced to one partition), and its scan
+    prunes on symbol_clean and dt."""
+    from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.plans import (
+        analytics as A,
+    )
+
+    df = _BOUNDED[shape](A, api_silver)
+    plan, pf = _api_plan(spark, df)
+    assert "Exchange" not in plan, plan
+    assert "(dt#" in pf, pf
+    assert len(df.collect()) > 0
+
+
+@pytest.mark.parametrize("shape", list(_UNBOUNDED))
+def test_unbounded_request_keeps_parallel_scan(spark, api_silver, shape):
+    """Without both dates, or over more than a quarter of days, a
+    one-symbol request keeps the parallel scan and its shuffle: one task
+    would read the symbol's daily files one after another."""
+    from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.plans import (
+        analytics as A,
+    )
+
+    df = _UNBOUNDED[shape](A, api_silver)
+    plan, pf = _api_plan(spark, df)
+    assert "Exchange" in plan, plan
+    assert ("(dt#" in pf) == (shape != "point_5m_limit"), pf
     assert len(df.collect()) > 0
 
 
